@@ -59,6 +59,62 @@ def test_compression_api_brotli_zstd_now_writable():
         assert decompress(blob, codec) == b"payload" * 50
 
 
+def _zstd_native():
+    from versatiles_rs_spark.functions import brotli_native
+
+    if not brotli_native.HAS_ZSTD:
+        pytest.skip("system libzstd not available")
+    return brotli_native
+
+
+def _rle_frame(n_blocks: int) -> bytes:
+    """A zstd frame with no content size: ``n_blocks`` RLE blocks of 128 KiB."""
+    out = bytearray(b"\x28\xb5\x2f\xfd\x00\x38")  # no FCS, 128 KiB window
+    for i in range(n_blocks):
+        last = int(i == n_blocks - 1)
+        out += (last | (1 << 1) | ((1 << 17) << 3)).to_bytes(3, "little") + b"z"
+    return bytes(out)
+
+
+def test_zstd_native_corrupt_frame_fails_fast():
+    import time
+
+    native = _zstd_native()
+    frame = native.zstd_compress_native(b"payload " * 4000)
+    flipped = bytearray(frame)
+    flipped[7] |= 0b110  # first block header (after magic, descriptor, size): reserved type
+    no_size = _rle_frame(1)[:-1] + bytes(19)  # no content size, corrupt block
+    for bad in (frame[: len(frame) // 2], frame[:-1], bytes(flipped), no_size, b"garbage"):
+        t = time.perf_counter()
+        with pytest.raises(ValueError):
+            native.zstd_decompress_native(bad)
+        assert time.perf_counter() - t < 0.1
+
+
+def test_zstd_native_rejects_huge_declared_size(monkeypatch):
+    import ctypes
+
+    native = _zstd_native()
+    # single-segment frame declaring 1 TiB in an 8-byte content size field
+    frame = b"\x28\xb5\x2f\xfd\xe0" + (1 << 40).to_bytes(8, "little") + b"\x01\x00\x00"
+    sizes = []
+    real = ctypes.create_string_buffer
+    monkeypatch.setattr(ctypes, "create_string_buffer", lambda n: sizes.append(n) or real(n))
+    with pytest.raises(ValueError):
+        native.zstd_decompress_native(frame)
+    assert sizes == []
+
+
+def test_zstd_native_grows_only_for_a_full_buffer():
+    native = _zstd_native()
+    # 1.25 MiB from 46 bytes: past the first buffer, so it must grow
+    assert native.zstd_decompress_native(_rle_frame(10)) == b"z" * (10 << 17)
+    two = native.zstd_compress_native(b"a" * 1000) + native.zstd_compress_native(b"b" * 70000)
+    assert native.zstd_decompress_native(two) == b"a" * 1000 + b"b" * 70000
+    with pytest.raises(ValueError):
+        native.zstd_decompress_native(_rle_frame(10), max_out=1 << 20)
+
+
 # ---------------------------------------------------------------------------
 # .versatiles
 # ---------------------------------------------------------------------------

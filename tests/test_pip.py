@@ -2,8 +2,12 @@
 
 from __future__ import annotations
 
+import tracemalloc
+
 import numpy as np
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from versatiles_rs_spark.spatial import (
@@ -13,7 +17,13 @@ from versatiles_rs_spark.spatial import (
     pip_join,
     sample_polygons,
 )
-from versatiles_rs_spark.spatial.pip import FULLY_INSIDE, FULLY_OUTSIDE, PARTIAL
+from versatiles_rs_spark.spatial.pip import (
+    _PAIR_BUDGET,
+    FULLY_INSIDE,
+    FULLY_OUTSIDE,
+    PARTIAL,
+    band_index,
+)
 
 
 def _unit_square() -> Polygon:
@@ -65,6 +75,143 @@ def test_pip_matches_matplotlib_oracle():
         # allow disagreement only exactly on the boundary (measure-zero set;
         # random doubles never land there)
         assert disagree.sum() == 0, f"{poly.name}: {disagree.sum()} mismatches"
+
+
+def _brute_contains(px, py, edges) -> np.ndarray:
+    """Reference: every point against every edge, blocked over both axes
+    (the ray cast before the band index)."""
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    x1, y1, x2, y2 = (np.asarray(a, dtype=np.float64) for a in edges)
+    n, e = len(px), len(x1)
+    crossings = np.zeros(n, dtype=np.int64)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        for p0 in range(0, n, 2048):
+            p1 = min(p0 + 2048, n)
+            bpx = px[p0:p1, None]
+            bpy = py[p0:p1, None]
+            acc = np.zeros(p1 - p0, dtype=np.int64)
+            for e0 in range(0, e, 128):
+                e1 = min(e0 + 128, e)
+                ey1 = y1[None, e0:e1]
+                ey2 = y2[None, e0:e1]
+                straddles = (ey1 > bpy) != (ey2 > bpy)
+                x_at_y = (x2 - x1)[None, e0:e1] * (bpy - ey1) / (ey2 - ey1) + x1[None, e0:e1]
+                acc += (straddles & (bpx < x_at_y)).sum(axis=1)
+            crossings[p0:p1] = acc
+    return (crossings % 2).astype(bool)
+
+
+def _ring_edges(rings):
+    """Edges of every ring, zero-length ones kept (``Polygon.edges`` drops them)."""
+    a = np.array([p for r in rings for p in r], dtype=np.float64)
+    b = np.array([r[(i + 1) % len(r)] for r in rings for i in range(len(r))], dtype=np.float64)
+    return a[:, 0], a[:, 1], b[:, 0], b[:, 1]
+
+
+# coarse grid values: shared x/y values make horizontal edges, duplicate and
+# zero-length vertices, and points on vertex rays common
+_grid = st.integers(-6, 6).map(lambda v: v / 2.0)
+_coord = st.one_of(_grid, st.floats(-4.0, 4.0, allow_nan=False, width=32))
+_ring = st.lists(st.tuples(_coord, _coord), min_size=1, max_size=24)
+
+
+@st.composite
+def _polygon_and_points(draw):
+    rings = draw(st.lists(_ring, min_size=1, max_size=3))
+    if draw(st.booleans()):
+        # a nested ring: the first ring shrunk about its first vertex (a hole
+        # touching the outer ring when that ring is convex)
+        (cx, cy) = rings[0][0]
+        rings.append([(cx + (x - cx) / 2.0, cy + (y - cy) / 2.0) for x, y in rings[0]])
+    xs = sorted({p[0] for r in rings for p in r})
+    ys = sorted({p[1] for r in rings for p in r})
+    px_s = st.one_of(_coord, st.sampled_from(xs), st.sampled_from([-1e6, 1e6, np.nan]))
+    py_s = st.one_of(
+        _coord, st.sampled_from(ys), st.sampled_from([ys[0], ys[-1], -1e6, 1e6, np.nan])
+    )
+    pts = draw(st.lists(st.tuples(px_s, py_s), min_size=1, max_size=60))
+    px, py = (np.array(v, dtype=np.float64) for v in zip(*pts))
+    return rings, px, py
+
+
+@settings(max_examples=150, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@example(
+    (
+        [
+            [(0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 4.0)],
+            [(1.0, 1.0), (3.0, 1.0), (3.0, 3.0), (1.0, 3.0)],
+        ],
+        np.array([2.0, 0.5, 0.0, 3.0, 2.0, np.nan, 1.0]),
+        np.array([2.0, 0.5, 4.0, 1.0, 0.0, 2.0, np.nan]),
+    )
+)
+@example(
+    (
+        [[(0.0, 0.0), (4.0, 0.0), (np.nan, 1.0), (4.0, 4.0), (np.inf, 2.0), (0.0, 4.0),
+          (-np.inf, 3.0)]],
+        np.array([1.0, 3.0, -1.0, np.inf, -np.inf, 2.0]),
+        np.array([1.0, 2.0, 3.0, 2.0, 0.5, 4.0]),
+    )
+)
+@given(_polygon_and_points())
+def test_banded_ray_cast_matches_brute_kernel(case):
+    """The band index never changes a mask bit: horizontal, zero-length and
+    duplicate edges, points on vertex rays, at ymin/ymax, outside the bbox,
+    NaN coordinates, non-finite vertex x, multi-ring polygons with holes."""
+    rings, px, py = case
+    for edges in (Polygon(1, "p", "prop", rings).edges(), _ring_edges(rings)):
+        want = _brute_contains(px, py, edges)
+        assert np.array_equal(pip_contains_np(px, py, edges), want)
+        assert np.array_equal(pip_contains_np(px, py, band_index(edges)), want)
+
+
+def test_band_index_rejects_non_finite_vertex_y():
+    for bad in (np.nan, np.inf):
+        with pytest.raises(ValueError):
+            band_index(Polygon(1, "p", "bad", [[(0.0, 0.0), (1.0, bad), (1.0, 1.0)]]).edges())
+
+
+def test_banded_ray_cast_matches_brute_on_dense_rings():
+    """The benchmark's three 2880-vertex rings, with points on vertex y values."""
+    from perfbench.gen import dense_rings
+
+    rng = np.random.default_rng(5)
+    for ring in dense_rings(1):
+        poly = Polygon(1, "dense", "ring", [ring])
+        x0, y0, x1, y1 = poly.bbox()
+        px = rng.uniform(x0 - 1, x1 + 1, 8000)
+        py = rng.uniform(y0 - 1, y1 + 1, 8000)
+        py[:300] = np.array(ring)[rng.integers(0, len(ring), 300), 1]
+        index = band_index(poly.edges())
+        assert len(index.starts) - 1 == 2880 // 4
+        assert np.array_equal(pip_contains_np(px, py, index), _brute_contains(px, py, poly.edges()))
+
+
+def test_banded_ray_cast_memory_stays_within_pair_budget():
+    """A saw-tooth 'comb' whose 400 edges all span the full y range puts
+    every edge in every band; 100k points must still run in chunks of
+    ``_PAIR_BUDGET`` pairs, never as N x E intermediates."""
+    teeth = 200
+    ring = [(0.0, -1.0)]
+    for k in range(teeth):
+        ring += [(k + 0.5, 1.0), (k + 1.0, -1.0)]
+    poly = Polygon(1, "comb", "comb", [ring])
+    index = band_index(poly.edges())
+    assert (np.diff(index.starts) >= 2 * teeth).all()
+    rng = np.random.default_rng(9)
+    n = 100_000
+    px = rng.uniform(-1.0, teeth + 1.0, n)
+    py = rng.uniform(-1.2, 1.2, n)
+    tracemalloc.start()
+    try:
+        got = pip_contains_np(px, py, index)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    pairs = n * 2 * teeth
+    assert peak < 64 * n + 256 * _PAIR_BUDGET < pairs, (peak, pairs)
+    assert np.array_equal(got, _brute_contains(px, py, poly.edges()))
 
 
 def test_classify_tiles():

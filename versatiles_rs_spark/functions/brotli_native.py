@@ -66,6 +66,12 @@ if HAS_ZSTD:
     _zstd.ZSTD_isError.argtypes = [ctypes.c_size_t]
     _zstd.ZSTD_getFrameContentSize.restype = ctypes.c_ulonglong
     _zstd.ZSTD_getFrameContentSize.argtypes = [ctypes.c_char_p, ctypes.c_size_t]
+    _zstd.ZSTD_getErrorCode.restype = ctypes.c_int
+    _zstd.ZSTD_getErrorCode.argtypes = [ctypes.c_size_t]
+
+_ZSTD_CONTENTSIZE_UNKNOWN = 0xFFFFFFFFFFFFFFFF
+_ZSTD_CONTENTSIZE_ERROR = 0xFFFFFFFFFFFFFFFE
+_ZSTD_ERROR_DST_SIZE_TOO_SMALL = 70  # zstd_errors.h ZSTD_error_dstSize_tooSmall
 
 
 def brotli_decompress_native(data: bytes, max_out: int = 1 << 31) -> bytes:
@@ -96,21 +102,29 @@ def brotli_compress_native(data: bytes, quality: int = 10, lgwin: int = 19) -> b
 
 
 def zstd_decompress_native(data: bytes, max_out: int = 1 << 31) -> bytes:
+    """One-shot decode. The buffer starts at the frame's declared content
+    size (rejected above ``max_out`` before anything is allocated) or, when
+    the header declares none, at a few times the input, and grows only
+    while zstd reports a too-small destination; any other error is a
+    corrupt frame and fails at once."""
     size = _zstd.ZSTD_getFrameContentSize(data, len(data))
-    if size in (0xFFFFFFFFFFFFFFFF, 0xFFFFFFFFFFFFFFFE):  # unknown / error
-        cap = max(4 * len(data) + (1 << 16), 1 << 16)
-        while cap <= max_out:
-            buf = ctypes.create_string_buffer(cap)
-            r = _zstd.ZSTD_decompress(buf, cap, data, len(data))
-            if not _zstd.ZSTD_isError(r):
-                return buf.raw[:r]
-            cap *= 4
-        raise ValueError("zstd stream failed to decode (or exceeds max_out)")
-    buf = ctypes.create_string_buffer(int(size) if size else 1)
-    r = _zstd.ZSTD_decompress(buf, int(size), data, len(data))
-    if _zstd.ZSTD_isError(r):
-        raise ValueError("zstd decode failed")
-    return buf.raw[:r]
+    if size == _ZSTD_CONTENTSIZE_ERROR:
+        raise ValueError("zstd frame header is corrupt")
+    if size == _ZSTD_CONTENTSIZE_UNKNOWN:
+        cap = 4 * len(data) + (1 << 16)
+    elif size > max_out:
+        raise ValueError(f"zstd frame declares {size} bytes, more than max_out")
+    else:
+        cap = max(int(size), 1)
+    while cap <= max_out:
+        buf = ctypes.create_string_buffer(cap)
+        r = _zstd.ZSTD_decompress(buf, cap, data, len(data))
+        if not _zstd.ZSTD_isError(r):
+            return buf.raw[:r]
+        if _zstd.ZSTD_getErrorCode(r) != _ZSTD_ERROR_DST_SIZE_TOO_SMALL:
+            raise ValueError("zstd stream is corrupt")
+        cap *= 4
+    raise ValueError("zstd stream exceeds max_out")
 
 
 def zstd_compress_native(data: bytes, level: int = 19) -> bytes:

@@ -32,6 +32,7 @@ from versatiles_rs_spark.spatial.pip import (
     FULLY_INSIDE,
     FULLY_OUTSIDE,
     Polygon,
+    band_index,
     classify_tiles,
     pip_contains_np,
 )
@@ -82,7 +83,7 @@ def raster_mask(
     test, results OR-ed) — NOT the even-odd rule over the concatenated ring
     set, which would wrongly unmask regions where two polygons overlap."""
     polys = [poly] if isinstance(poly, Polygon) else list(poly)
-    edge_sets = [p.edges() for p in polys]
+    indexes = [band_index(p.edges()) for p in polys]
 
     def fn(t: Tile) -> Tile | None:
         xs, ys = np.array([t.x]), np.array([t.y])
@@ -98,10 +99,10 @@ def raster_mask(
         lats = north - (np.arange(h) + 0.5) / h * (north - south)
         gx, gy = np.meshgrid(lons, lats)
         inside = np.zeros(h * w, dtype=bool)
-        for cls, edges in zip(classes, edge_sets):
+        for cls, index in zip(classes, indexes):
             if cls == FULLY_OUTSIDE:
                 continue
-            inside |= pip_contains_np(gx.ravel(), gy.ravel(), edges)
+            inside |= pip_contains_np(gx.ravel(), gy.ravel(), index)
         inside = inside.reshape(h, w)
         alpha = inside.astype(np.float64)
         for _ in range(smooth):

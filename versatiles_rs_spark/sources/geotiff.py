@@ -448,16 +448,16 @@ def _tile_candidates(
 
 
 def _cutline_edges(cutline):
-    """Cutline argument (Polygon | list of rings | None) -> (edges, bbox)
-    for the vectorized ray cast (spatial/pip.py), mirroring the reference's
-    cutline mask (read/from_gdal/cutline.rs)."""
+    """Cutline argument (Polygon | list of rings | None) -> (band index,
+    bbox) for the banded ray cast (spatial/pip.py), mirroring the
+    reference's cutline mask (read/from_gdal/cutline.rs)."""
     if cutline is None:
         return None, None
-    from versatiles_rs_spark.spatial.pip import Polygon
+    from versatiles_rs_spark.spatial.pip import Polygon, band_index
 
     if not isinstance(cutline, Polygon):
         cutline = Polygon(0, "cutline", "cutline", [list(map(tuple, r)) for r in cutline])
-    return cutline.edges(), cutline.bbox()
+    return band_index(cutline.edges()), cutline.bbox()
 
 
 def _cubic_kernel(x: np.ndarray) -> np.ndarray:

@@ -34,6 +34,7 @@ from versatiles_rs_spark.spatial.pip import (
     FULLY_OUTSIDE,
     PARTIAL,
     Polygon,
+    band_index,
     classify_tiles,
     pip_contains_np,
 )
@@ -129,12 +130,12 @@ def pip_join_cells(
     sure = joined.filter(F.col("cls") == FULLY_INSIDE).drop("cls", "cell_id")
 
     maybe = joined.filter(F.col("cls") == PARTIAL).drop("cls", "cell_id")
-    edge_map = {p.feature_id: p.edges() for p in polygons}
-    bc = spark.sparkContext.broadcast(edge_map)
+    index_map = {p.feature_id: band_index(p.edges()) for p in polygons}
+    bc = spark.sparkContext.broadcast(index_map)
     out_fields = sure.schema
 
     def exact(it):
-        edges_by_fid = bc.value
+        index_by_fid = bc.value
         for pdf in it:
             if pdf.empty:
                 continue
@@ -142,7 +143,7 @@ def pip_join_cells(
             for fid in np.unique(pdf["feature_id"].values):
                 m = pdf["feature_id"].values == fid
                 keep[m] = pip_contains_np(
-                    pdf[lon_col].values[m], pdf[lat_col].values[m], edges_by_fid[int(fid)]
+                    pdf[lon_col].values[m], pdf[lat_col].values[m], index_by_fid[int(fid)]
                 )
             out = pdf.loc[keep]
             if len(out):

@@ -6,19 +6,30 @@ Re-expresses raster_mask's spatial machinery
 - ``classify_tiles``  : FullyInside / FullyOutside / Partial tile-vs-polygon
   classification (mask_geometry.rs:237 ``classify_tile``) — the coarse-to-fine
   pruning stage, so the exact per-point test only runs on Partial tiles.
-- ``pip_contains_np`` : vectorized even-odd ray cast, exact semantics of
+- ``band_index``      : the per-polygon edge index that stands in for the
+  reference's R-tree beside its polygons (mask_geometry.rs:164). The
+  polygon's y-range is cut into about E/4 equal bands (capped), and a CSR
+  map lists for each band the int32 ids of the edges whose y-span meets it.
+  Built once per polygon, on the driver for the Spark joins.
+- ``pip_contains_np`` : banded even-odd ray cast, exact semantics of
   ``ray_crosses`` (mask_geometry.rs:85): a ray to +x crosses edge (p1, p2)
   iff ``(y1 > py) != (y2 > py)`` and ``px < (x2-x1)*(py-y1)/(y2-y1) + x1``.
+  Each point meets only the edges of its band. That is exact: an edge can
+  cross a point's ray only when ``min(y1,y2) <= py < max(y1,y2)``, and the
+  band of a y is a monotone function of y, so such an edge is always
+  listed in the point's band. The (point, edge) pairs are evaluated flat,
+  in chunks of at most ``_PAIR_BUDGET`` pairs, with the same expression
+  and operation order as a test against every edge: the masks are
+  bit-identical, and memory stays bounded even when every band holds
+  every edge.
 - ``pip_join``        : DataFrame join point-rows x polygon-set. The polygon
-  set is broadcast (like the reference's one-time R-tree build,
-  mask_geometry.rs:164); the probe side is a zero-shuffle mapInArrow with a
-  per-batch bbox prefilter standing in for the R-tree — candidate pruning is
-  O(1) numpy compares per polygon instead of tree descent, which wins for
-  broadcastable polygon counts. No pandas frame is materialized on either
-  side of the Arrow boundary, and ``payload_cols`` trims the return stream.
+  set is broadcast with its band indexes; the probe side is a zero-shuffle
+  mapInArrow with a per-batch bbox prefilter in front of the banded ray
+  cast. No pandas frame is materialized on either side of the Arrow
+  boundary, and ``payload_cols`` trims the return stream.
 
 Scale: no shuffle at all — each task streams its point partition against the
-broadcast edge arrays; 10^12 points parallelize embarrassingly. For polygon
+broadcast band indexes; 10^12 points parallelize embarrassingly. For polygon
 sets too big to broadcast, the planner should fall back to the cell-cover
 equi-join (spatial/cells.py) — same two-stage shape as the reference.
 """
@@ -69,42 +80,106 @@ class Polygon:
         return min(xs), min(ys), max(xs), max(ys)
 
 
-_PT_BLOCK = 2048
-_EDGE_BLOCK = 128
+# Bands per polygon: about one per four edges (a few edges per band on a
+# border-like ring), capped so the band map of a huge ring stays small.
+_EDGES_PER_BAND = 4
+_MAX_BANDS = 4096
+# (point, edge) pairs evaluated at once: the kernel's intermediates (about
+# 100 bytes a pair) stay cache-sized whatever the polygon's shape.
+_PAIR_BUDGET = 1 << 14
+
+
+@dataclass(frozen=True, eq=False)
+class BandIndex:
+    """A polygon's edges plus a y-band map: ``[ymin, ymax)`` is cut into
+    equal bands and band ``b`` lists, in CSR form
+    (``ids[starts[b]:starts[b + 1]]``), every edge whose y-span meets it."""
+
+    x1: np.ndarray
+    y1: np.ndarray
+    x2: np.ndarray
+    y2: np.ndarray
+    ymin: float
+    ymax: float
+    scale: float
+    starts: np.ndarray
+    ids: np.ndarray
+
+
+def _band(y: np.ndarray, ymin: float, scale: float, nb: int) -> np.ndarray:
+    """Band of each ``y >= ymin``: monotone non-decreasing in y, and
+    ``y*scale - ymin*scale`` stays finite for any finite y."""
+    return np.minimum((y * scale - ymin * scale).astype(np.int64), nb - 1)
+
+
+def band_index(edges) -> BandIndex:
+    """Build the y-band edge index of one polygon's ``edges()`` tuple.
+    Vertex y values must be finite: the bands partition ``[ymin, ymax)``."""
+    x1, y1, x2, y2 = (np.asarray(a, dtype=np.float64) for a in edges)
+    if not (np.isfinite(y1).all() and np.isfinite(y2).all()):
+        raise ValueError("polygon vertex y values must be finite")
+    lo, hi = np.minimum(y1, y2), np.maximum(y1, y2)
+    ymin = float(lo.min()) if len(lo) else 0.0
+    ymax = float(hi.max()) if len(hi) else 0.0
+    nb = min(max(len(x1) // _EDGES_PER_BAND, 1), _MAX_BANDS)
+    scale = nb / (ymax - ymin) if ymax > ymin else 0.0
+    b_lo = _band(lo, ymin, scale, nb)
+    span = _band(hi, ymin, scale, nb) - b_lo + 1
+    edge = np.repeat(np.arange(len(x1), dtype=np.int32), span)
+    band = np.repeat(b_lo - (np.cumsum(span) - span), span) + np.arange(span.sum())
+    starts = np.concatenate([[0], np.cumsum(np.bincount(band, minlength=nb))])
+    ids = edge[np.argsort(band, kind="stable")]
+    return BandIndex(x1, y1, x2, y2, ymin, ymax, scale, starts, ids)
 
 
 def pip_contains_np(px: np.ndarray, py: np.ndarray, edges) -> np.ndarray:
-    """Even-odd ray cast of N points against E edges; bool mask.
+    """Even-odd ray cast of N points against one polygon; bool mask.
 
-    Exact ``ray_crosses`` arithmetic (mask_geometry.rs:85): note the strict
-    ``>`` on both y-comparisons (half-open rule — a vertex counts for the
-    edge whose y1 is at/below the ray) and the strict ``<`` on x.
+    ``edges`` is a polygon's ``edges()`` tuple or its prebuilt
+    ``band_index``. Exact ``ray_crosses`` arithmetic (mask_geometry.rs:85):
+    note the strict ``>`` on both y-comparisons (half-open rule — a vertex
+    counts for the edge whose y1 is at/below the ray) and the strict ``<``
+    on x.
 
-    Blocked over both axes so the (pts x edges) float64 intermediates stay
-    cache-resident — the naive full matrix saturates memory bandwidth and
-    anti-scales past ~8 concurrent workers. Crossing counts are integers, so
-    blocking does not change any result bit.
+    Banded: an edge can count for a point only when ``lo <= py < hi`` (its
+    y-span, half open), so a point outside the polygon's ``[ymin, ymax)``
+    crosses nothing, and a point inside it need only meet the edges listed
+    for its band. The band of a y is monotone in y, so every edge that
+    straddles ``py`` is listed for ``py``'s band and no crossing is lost.
+    Each candidate point is expanded (``np.repeat``) to the edges of its
+    band, the same crossing expression is evaluated on the flat pairs and
+    the crossings are counted per point with ``np.bincount``: the mask is
+    bit-identical to testing every edge. Points go through in chunks of at
+    most ``_PAIR_BUDGET`` pairs (at least one point), so a polygon whose
+    bands all hold many long edges never allocates N x E intermediates.
     """
+    idx = edges if isinstance(edges, BandIndex) else band_index(edges)
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
-    x1, y1, x2, y2 = (np.asarray(a, dtype=np.float64) for a in edges)
-    n, e = len(px), len(x1)
-    crossings = np.zeros(n, dtype=np.int64)
+    inside = np.zeros(len(px), dtype=bool)
+    pts = np.flatnonzero((py >= idx.ymin) & (py < idx.ymax))
+    cx, cy = px[pts], py[pts]
+    band = _band(cy, idx.ymin, idx.scale, len(idx.starts) - 1)
+    first = idx.starts[band]
+    count = idx.starts[band + 1] - first
+    done = np.cumsum(count)
+    i = 0
     with np.errstate(divide="ignore", invalid="ignore"):
-        for p0 in range(0, n, _PT_BLOCK):
-            p1 = min(p0 + _PT_BLOCK, n)
-            bpx = px[p0:p1, None]
-            bpy = py[p0:p1, None]
-            acc = np.zeros(p1 - p0, dtype=np.int64)
-            for e0 in range(0, e, _EDGE_BLOCK):
-                e1 = min(e0 + _EDGE_BLOCK, e)
-                ey1 = y1[None, e0:e1]
-                ey2 = y2[None, e0:e1]
-                straddles = (ey1 > bpy) != (ey2 > bpy)
-                x_at_y = (x2 - x1)[None, e0:e1] * (bpy - ey1) / (ey2 - ey1) + x1[None, e0:e1]
-                acc += (straddles & (bpx < x_at_y)).sum(axis=1)
-            crossings[p0:p1] = acc
-    return (crossings % 2).astype(bool)
+        while i < len(pts):
+            base = done[i - 1] if i else 0
+            j = max(int(np.searchsorted(done, base + _PAIR_BUDGET, side="right")), i + 1)
+            c = count[i:j]
+            pair_pt = np.repeat(np.arange(j - i), c)
+            slot = np.repeat(first[i:j] - (done[i:j] - c - base), c) + np.arange(done[j - 1] - base)
+            e = idx.ids[slot]
+            x1, y1, x2, y2 = idx.x1[e], idx.y1[e], idx.x2[e], idx.y2[e]
+            bpx, bpy = cx[i:j][pair_pt], cy[i:j][pair_pt]
+            straddles = (y1 > bpy) != (y2 > bpy)
+            x_at_y = (x2 - x1) * (bpy - y1) / (y2 - y1) + x1
+            hits = np.bincount(pair_pt[straddles & (bpx < x_at_y)], minlength=j - i)
+            inside[pts[i:j]] = (hits % 2).astype(bool)
+            i = j
+    return inside
 
 
 def _segments_intersect_rect(
@@ -244,7 +319,7 @@ def pip_join(
     if points.rdd.getNumPartitions() < target:
         points = points.repartition(target)
     payload = [
-        (p.feature_id, p.name, p.edges(), p.bbox())
+        (p.feature_id, p.name, band_index(p.edges()), p.bbox())
         for p in polygons
     ]
     bc = spark.sparkContext.broadcast(payload)
@@ -254,6 +329,9 @@ def pip_join(
 
     def probe(it: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         polys = bc.value
+        # per-row polygon position -> feature_id / poly_name by one take each
+        fid_of = pa.array([p[0] for p in polys], type=pa.int32())
+        name_of = pa.array([p[1] for p in polys], type=pa.string())
         for batch in it:
             tbl = pa.Table.from_batches([batch])
             lon_i = batch.schema.get_field_index(lon_col)
@@ -262,39 +340,31 @@ def pip_join(
             py = batch.column(lat_i).to_numpy(zero_copy_only=False).astype(np.float64)
             n = len(px)
             idx_parts: list[np.ndarray] = []
-            fid_parts: list[np.ndarray] = []
-            name_parts: list[np.ndarray] = []
+            pos_parts: list[np.ndarray] = []
             matched = np.zeros(n, dtype=bool)
-            for fid, name, edges, (bx0, by0, bx1, by1) in polys:
+            for k, (_, _, index, (bx0, by0, bx1, by1)) in enumerate(polys):
                 cand = (px >= bx0) & (px <= bx1) & (py >= by0) & (py <= by1)
                 if not cand.any():
                     continue
                 inside = np.zeros(n, dtype=bool)
-                inside[cand] = pip_contains_np(px[cand], py[cand], edges)
+                inside[cand] = pip_contains_np(px[cand], py[cand], index)
                 hit_idx = np.nonzero(inside)[0]
                 if len(hit_idx):
                     idx_parts.append(hit_idx)
-                    fid_parts.append(np.full(len(hit_idx), fid, dtype=np.int32))
-                    name_parts.append(np.full(len(hit_idx), name, dtype=object))
+                    pos_parts.append(np.full(len(hit_idx), k, dtype=np.int32))
                     matched |= inside
             if how == "left":
                 miss_idx = np.nonzero(~matched)[0]
                 if len(miss_idx):
                     idx_parts.append(miss_idx)
-                    fid_parts.append(np.full(len(miss_idx), -1, dtype=np.int32))
-                    name_parts.append(np.full(len(miss_idx), None, dtype=object))
+                    pos_parts.append(np.full(len(miss_idx), -1, dtype=np.int32))
             if not idx_parts:
                 continue
             idx = np.concatenate(idx_parts)
-            fids = np.concatenate(fid_parts)
-            names = np.concatenate(name_parts)
+            pos = np.concatenate(pos_parts)
+            pos_arr = pa.array(pos, mask=pos == -1)
             taken = tbl.select(out_names).take(pa.array(idx))
-            fid_arr = pa.array(fids, type=pa.int32())
-            if how == "left":
-                fid_arr = pa.array(
-                    [None if f == -1 else int(f) for f in fids], type=pa.int32()
-                )
-            cols = list(taken.columns) + [fid_arr, pa.array(names, type=pa.string())]
+            cols = list(taken.columns) + [fid_of.take(pos_arr), name_of.take(pos_arr)]
             out = pa.Table.from_arrays(cols, names=out_names + ["feature_id", "poly_name"])
             yield from out.combine_chunks().to_batches()
 
