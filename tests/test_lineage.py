@@ -528,3 +528,160 @@ def test_read_keyed_point_lookup_and_snapshot_diff(tmp_path, spark, sf_dir):
         for r in snapshot_diff(spark, table, res["snapshot_id"] - 1).collect()
     }
     assert diff == {5: "updated", 777: "inserted", 9: "deleted"}
+
+
+def _table_state(spark, table: str) -> tuple:
+    """What a resume must reproduce: per-tile rows, committed batch ids in
+    commit order, and their row counts."""
+    m = read_manifest(table)
+    order = sorted(m["batches"], key=lambda b: m["batches"][b]["snapshot_id"])
+    rows = _tile_rows(read_tiles(spark, table))
+    return rows, order, [m["batches"][b]["row_count"] for b in order]
+
+
+BITS = 1  # 2x2-tile blocks: at z0-4, 86 static blocks, some of them empty
+
+
+def test_kill_inside_write_job_resumes_exact(tiles, tmp_path, spark, monkeypatch):
+    """A task failure inside the one write job commits nothing; the resume,
+    also past the temporary files of a hard-killed job, gives the
+    uninterrupted table (tiles, batch ids and order, row counts)."""
+    import versatiles_rs_spark.lineage as lineage
+    from pyspark import TaskContext
+
+    full = str(tmp_path / "full")
+    convert_resumable(tiles, full, 0, MAXZ, block_bits=BITS)
+
+    real = lineage._write
+
+    def dying(rows, data_dir, *totals):
+        def fail(batches):
+            for pdf in batches:
+                if TaskContext.get().partitionId() == 1:
+                    raise RuntimeError("killed")
+                yield pdf
+
+        return real(rows.mapInPandas(fail, rows.schema), data_dir, *totals)
+
+    killed = str(tmp_path / "killed")
+    monkeypatch.setattr(lineage, "_write", dying)
+    with pytest.raises(Exception, match="killed"):
+        convert_resumable(tiles, killed, 0, MAXZ, block_bits=BITS)
+    monkeypatch.undo()
+    assert read_manifest(killed)["batches"] == {}
+    assert not os.path.exists(os.path.join(killed, "_lineage"))
+    # a hard kill also leaves the output committer's task files behind
+    some = next(iter(read_manifest(full)["batches"]))
+    for leftover in ("_temporary/0/task_killed", ".spark-staging-killed"):
+        tiles.write.parquet(os.path.join(killed, "data", leftover, f"batch={some}"))
+
+    recs = convert_resumable(tiles, killed, 0, MAXZ, block_bits=BITS)
+    assert len(recs) == len(read_manifest(full)["batches"])
+    assert _table_state(spark, killed) == _table_state(spark, full)
+
+
+def test_stale_uncommitted_batch_dirs_replaced(tiles, tmp_path, spark):
+    """Leftover files in an uncommitted batch=<id> directory are replaced,
+    not added to, and an uncommitted directory of an empty block goes."""
+    full = str(tmp_path / "full")
+    convert_resumable(tiles, full, 0, MAXZ, block_bits=BITS)
+    filled = read_manifest(full)["batches"]
+    empty = next(b.batch_id for b in plan_batches(0, MAXZ, BITS) if b.batch_id not in filled)
+    stale = max(filled, key=lambda b: filled[b]["snapshot_id"])
+
+    table = str(tmp_path / "stale")
+    for batch in (stale, empty):
+        tiles.filter("z = 4").write.parquet(os.path.join(table, "data", f"batch={batch}"))
+    convert_resumable(tiles, table, 0, MAXZ, block_bits=BITS)
+    assert _table_state(spark, table) == _table_state(spark, full)
+    assert not os.path.exists(os.path.join(table, "data", f"batch={empty}"))
+    rec = json.load(open(os.path.join(table, "_lineage", f"batch={stale}.json")))
+    assert sum(f["rows"] for f in rec["files"]) == rec["row_count"] == filled[stale]["row_count"]
+
+
+def test_resume_leaves_committed_batch_files_alone(tiles, tmp_path, monkeypatch):
+    """A resume after a kill between commits rewrites only uncommitted
+    batches: every file of a committed batch keeps its path and mtime."""
+    import versatiles_rs_spark.lineage as lineage
+
+    commit = lineage._commit_snapshot
+
+    def dying(table, manifest, snapshot):
+        if snapshot["snapshot_id"] > 3:
+            raise RuntimeError("killed")
+        commit(table, manifest, snapshot)
+
+    table = str(tmp_path / "t")
+    monkeypatch.setattr(lineage, "_commit_snapshot", dying)
+    with pytest.raises(RuntimeError, match="killed"):
+        convert_resumable(tiles, table, 0, MAXZ, block_bits=BITS)
+    monkeypatch.undo()
+    done = read_manifest(table)["batches"]
+    assert len(done) == 3
+
+    def files():
+        out = {}
+        for b in done:
+            d = os.path.join(table, "data", f"batch={b}")
+            out.update({os.path.join(d, n): os.stat(os.path.join(d, n)).st_mtime_ns
+                        for n in os.listdir(d)})
+        return out
+
+    before = files()
+    assert before
+    rest = convert_resumable(tiles, table, 0, MAXZ, block_bits=BITS)
+    assert rest and not {r["batch_id"] for r in rest} & set(done)
+    assert files() == before
+    assert _tile_rows(read_tiles(tiles.sparkSession, table)) == _tile_rows(tiles)
+
+
+def test_write_total_mismatch_raises_before_any_commit(tiles, tmp_path, monkeypatch):
+    """When the write job sees other totals than the aggregate counted (a
+    row lost between the two), the call raises and nothing commits."""
+    import versatiles_rs_spark.lineage as lineage
+
+    real = lineage._write
+    monkeypatch.setattr(
+        lineage, "_write", lambda rows, d, *t: real(rows.filter("z > 0"), d, *t)
+    )
+    table = str(tmp_path / "t")
+    with pytest.raises(RuntimeError, match="nothing committed"):
+        convert_resumable(tiles, table, 0, MAXZ, block_bits=BITS)
+    monkeypatch.undo()
+    assert read_manifest(table) == {"batches": {}, "current_snapshot": 0}
+    assert not os.path.exists(os.path.join(table, "_snapshots"))
+    convert_resumable(tiles, table, 0, MAXZ, block_bits=BITS)
+    assert _tile_rows(read_tiles(tiles.sparkSession, table)) == _tile_rows(tiles)
+
+
+def test_one_call_runs_a_fixed_number_of_jobs(tmp_path, spark, sf_dir):
+    """A commit call runs at most 4 Spark jobs (render included), whatever
+    its batch count: one per shuffle of the render, the aggregate and the
+    write."""
+    from versatiles_rs_spark.lineage import keyed_resumable
+
+    sc = spark.sparkContext
+    geo = _docs_geo(spark, sf_dir).select("doc_id", "lon", "lat", "lang")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    try:
+        sc.setJobGroup("lineage-convert", "convert_resumable")
+        recs = convert_resumable(
+            render_point_tiles(assign_tiles(geo, 0, 9)), str(tmp_path / "t"), 0, 9, block_bits=6
+        )
+        sc.setJobGroup("lineage-keyed", "keyed_resumable")
+        keyed = keyed_resumable(docs, str(tmp_path / "k"), n_buckets=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(recs) > 4 and len(keyed) == 8
+    assert len(sc.statusTracker().getJobIdsForGroup("lineage-convert")) <= 4
+    assert len(sc.statusTracker().getJobIdsForGroup("lineage-keyed")) <= 4
+
+
+def test_batch_column_refused(tmp_path, spark, sf_dir):
+    """The write partitions on a 'batch' column of its own, so a frame that
+    already has one is refused before any job instead of being overwritten."""
+    from versatiles_rs_spark.lineage import keyed_resumable
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    with pytest.raises(ValueError, match="'batch' column"):
+        keyed_resumable(docs.withColumn("batch", F.lit(1)), str(tmp_path / "k"), n_buckets=2)

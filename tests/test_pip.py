@@ -166,6 +166,44 @@ def test_banded_ray_cast_matches_brute_kernel(case):
         assert np.array_equal(pip_contains_np(px, py, band_index(edges)), want)
 
 
+def _loop_edges(rings):
+    """``Polygon.edges`` as a loop over the vertices (the reference for the
+    vectorised version)."""
+    x1, y1, x2, y2 = [], [], [], []
+    for ring in rings:
+        n = len(ring)
+        for i in range(n):
+            a, b = ring[i], ring[(i + 1) % n]
+            if a == b:
+                continue
+            x1.append(a[0]); y1.append(a[1]); x2.append(b[0]); y2.append(b[1])  # noqa: E702
+    return np.array(x1), np.array(y1), np.array(x2), np.array(y2)
+
+
+@st.composite
+def _closed_or_open_rings(draw):
+    rings = draw(st.lists(_ring, min_size=1, max_size=3))
+    return [r + [r[0]] if draw(st.booleans()) else r for r in rings]
+
+
+@settings(max_examples=200, deadline=None)
+@example([[(0.0, 0.0), (4.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 4.0), (0.0, 0.0)],
+          [(1.0, 1.0), (3.0, 1.0), (3.0, 3.0), (1.0, 3.0)]])
+@example([[(1.0, 1.0)], [(2.0, 2.0), (2.0, 2.0)], [(0, 0), (3, 0), (3, 3)]])
+@given(_closed_or_open_rings())
+def test_edges_and_bbox_match_vertex_loop(rings):
+    """The vectorised edges equal the loop's exactly (values and order, as
+    float64) on closed and unclosed rings, repeated vertices, holes,
+    integer and one-vertex rings; bbox equals the min/max over every
+    vertex."""
+    poly = Polygon(1, "p", "prop", rings)
+    for got, want in zip(poly.edges(), _loop_edges(rings), strict=True):
+        assert got.dtype == np.float64 and np.array_equal(got, want)
+    xs = [p[0] for r in rings for p in r]
+    ys = [p[1] for r in rings for p in r]
+    assert poly.bbox() == (min(xs), min(ys), max(xs), max(ys))
+
+
 def test_band_index_rejects_non_finite_vertex_y():
     for bad in (np.nan, np.inf):
         with pytest.raises(ValueError):

@@ -101,3 +101,36 @@ def test_tar_compressed_write_roundtrip(spark, tmp_path):
         out = write_container(tiles, p)
         assert out["tiles"] == n
         assert read_container(spark, p).count() == n
+
+
+def test_compressed_tar_scratch_shared_and_removed_at_exit(tmp_path):
+    """A process decompresses a .tar.gz to one scratch .tar however often
+    it reads the archive, and removes it when the interpreter exits."""
+    import io
+    import os
+    import subprocess
+    import sys
+    import tarfile
+    import textwrap
+
+    archive = tmp_path / "t.tar.gz"
+    with tarfile.open(archive, "w:gz") as tf:
+        for name, data in (("0/0/0.pbf", b"a"), ("1/1/0.pbf", b"bc")):
+            info = tarfile.TarInfo(name)
+            info.size = len(data)
+            tf.addfile(info, io.BytesIO(data))
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    code = textwrap.dedent(f"""
+        import glob, os
+        from versatiles_rs_spark.sources.tar_reader import TarReader
+        for _ in range(2):
+            r = TarReader({str(archive)!r})
+            tiles = sorted(bytes(t) for b in r.read([r.units()]) for t in b["tile"])
+            assert tiles == [b"a", b"bc"], tiles
+        assert len(glob.glob(os.path.join({str(scratch)!r}, "*.tar"))) == 1
+    """)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TMPDIR": str(scratch), "PYTHONPATH": repo}
+    subprocess.run([sys.executable, "-c", code], env=env, check=True)
+    assert not list(scratch.glob("*.tar"))

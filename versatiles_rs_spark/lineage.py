@@ -26,21 +26,28 @@ earlier state, and ``plan_files`` prunes data files from manifest-recorded
 z/x/y bounds WITHOUT opening them (Iceberg-style metadata pruning — at
 100 TB the driver plans from kilobytes of manifests, never from the data).
 
-Batch stats ride on ``DataFrame.observe``: the counters are collected by
-the SAME Spark job that writes the files (no read-back aggregation job),
-and per-file stats come from the parquet footers (pyarrow metadata, no
-row reads). Tile batches and key batches share one commit path
-(``_write``) and one resumable loop (``_resume``).
+One commit path (``_resume``) serves tile and key batches, and one call
+costs a fixed number of Spark jobs whatever its batch count:
 
-Render once per commit: a batch is a filter over the whole pyramid, and
-Spark pushes no filter through the render's Python map, so the loop
-persists its input and every batch write scans the cache. For tiles the
-first action on the persisted pyramid is one aggregate of its distinct
-(z, x >> bits, y >> bits) blocks; the batches written are the static
-plan's uncommitted blocks that hold tiles, in plan order, so batch ids,
-commit order and ``as_of`` semantics do not depend on the data, and empty
-blocks commit nothing (at z0-14 with 64x64 blocks the static plan has
-87,387 blocks, nearly all empty).
+1. the input is persisted for the call, and its first action is one
+   aggregate per batch id (row count, tile/text byte sum, tile x/y
+   bounds; ``_batch_stats``), which fills the cache;
+2. one write job (``_write``) writes the rows of every uncommitted
+   batch that holds any, partitioned by batch id into
+   data/batch=<id>/ — a committed batch's directory is never touched,
+   an uncommitted batch's leftovers are replaced. The same job observes
+   its global row and byte totals, and they must equal the aggregate's
+   before anything commits;
+3. each batch commits in static plan order (``_commit``): per-file
+   stats from the parquet footers (pyarrow metadata, no row reads), the
+   lineage record, the snapshot, the atomic manifest swap — from one
+   read of the manifest per call.
+
+Tile batches are the static plan's uncommitted blocks that hold tiles,
+so batch ids, commit order and ``as_of`` semantics do not depend on the
+data, and empty blocks commit nothing (at z0-14 with 64x64 blocks the
+static plan has 87,387 blocks, nearly all empty); key batches commit
+even when empty, with no file.
 
 Concurrency contract: SINGLE WRITER (the Spark driver is the committer,
 exactly like the reference's one convert process) — the manifest swap is
@@ -52,12 +59,11 @@ committed snapshot.
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 import re
+import shutil
 import time
-from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark import StorageLevel
@@ -77,6 +83,10 @@ class TileBatch:
     @property
     def batch_id(self) -> str:
         return f"z{self.z}_x{self.x_block}_y{self.y_block}"
+
+    @property
+    def lineage(self) -> dict:
+        return {"z": self.z, "x_block": self.x_block, "y_block": self.y_block}
 
 
 def plan_batches(min_zoom: int, max_zoom: int, block_bits: int = 6) -> list[TileBatch]:
@@ -121,10 +131,12 @@ def resume_plan(table: str, batches: list[TileBatch]) -> list[TileBatch]:
 def _file_stats(data_dir: str) -> list[dict]:
     """Per-data-file statistics straight from the parquet footers: row
     count, on-disk size, and z/x/y min/max — the manifest entries pruning
-    plans from. No row is read."""
+    plans from. No row is read; a missing directory has no files."""
     import pyarrow.parquet as pq
 
     out = []
+    if not os.path.isdir(data_dir):
+        return out
     for name in sorted(os.listdir(data_dir)):
         if not name.endswith(".parquet"):
             continue
@@ -182,26 +194,25 @@ def _n_buckets(manifest: dict, table: str) -> int:
     return int(keyed[0].split("of")[1])
 
 
-def write_batch(table: str, batch: TileBatch, tiles: DataFrame) -> dict:
-    """Write and commit one tile batch: the rows of ``tiles`` in the
-    batch's z/x/y block, with their x/y bounds observed next to the row
-    and byte counts. Returns the lineage record.
-
-    The block filter sits above whatever produced ``tiles``, and Spark
-    pushes no predicate through a Python map, so on an uncached pyramid
-    each call re-renders all of it. ``convert_resumable`` materialises
-    the pyramid once for all of its batches; a caller writing batches
-    itself should cache ``tiles`` first."""
-    shift = batch.block_bits
-    block = (
-        (F.col("z") == batch.z)
-        & (F.shiftright("x", shift) == batch.x_block)
-        & (F.shiftright("y", shift) == batch.y_block)
+def _tile_key(block_bits: int) -> Column:
+    """The batch id of each tile row: its z/x/y block."""
+    return F.format_string(
+        "z%d_x%d_y%d", "z", F.shiftright("x", block_bits), F.shiftright("y", block_bits)
     )
-    lineage = {"z": batch.z, "x_block": batch.x_block, "y_block": batch.y_block}
-    bounds = [F.min("x").alias("x_min"), F.max("x").alias("x_max"),
-              F.min("y").alias("y_min"), F.max("y").alias("y_max")]
-    return _write(table, batch.batch_id, tiles.filter(block), "tile", lineage, *bounds)
+
+
+def write_batch(table: str, batch: TileBatch, tiles: DataFrame) -> dict | None:
+    """Write and commit one tile batch: the rows of ``tiles`` in the
+    batch's z/x/y block, with their row and byte counts and x/y bounds.
+    Returns the lineage record, or None when the batch is committed
+    already or its block holds no tiles (an empty block commits nothing).
+
+    A one-batch call of the commit path, so ``tiles`` is rendered once
+    and persisted for the call; a caller writing batches itself should
+    cache ``tiles`` first (``convert_resumable`` writes all of them at
+    once)."""
+    recs = _resume(tiles, table, [batch], _tile_key(batch.block_bits), "tile", ("x", "y"))
+    return recs[0] if recs else None
 
 
 @dataclass(frozen=True)
@@ -216,9 +227,20 @@ class KeyBatch:
     def batch_id(self) -> str:
         return f"k{self.bucket}of{self.n_buckets}"
 
+    @property
+    def lineage(self) -> dict:
+        return {"bucket": self.bucket, "n_buckets": self.n_buckets}
+
 
 def plan_key_batches(n_buckets: int) -> list[KeyBatch]:
     return [KeyBatch(b, n_buckets) for b in range(n_buckets)]
+
+
+def _bucket_key(key_col: str, n_buckets: int) -> Column:
+    """The batch id of each keyed row: bucket = pmod(xxhash64(key), n) is
+    stable across runs, so a resumed job re-derives identical buckets."""
+    bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
+    return F.format_string("k%dof%d", bucket, F.lit(n_buckets))
 
 
 def write_key_batch(
@@ -227,13 +249,12 @@ def write_key_batch(
     df: DataFrame,
     key_col: str = "doc_id",
     bytes_col: str = "text",
-) -> dict:
-    """Write and commit one hash bucket of a keyed table: bucket =
-    pmod(xxhash64(key), n) is stable across runs, so a resumed job
-    re-derives identical buckets."""
-    bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(batch.n_buckets))
-    lineage = {"bucket": batch.bucket, "n_buckets": batch.n_buckets}
-    return _write(table, batch.batch_id, df.filter(bucket == batch.bucket), bytes_col, lineage)
+) -> dict | None:
+    """Write and commit one hash bucket of a keyed table (empty or not);
+    None when the bucket is committed already."""
+    key = _bucket_key(key_col, batch.n_buckets)
+    recs = _resume(df, table, [batch], key, bytes_col, commit_empty=True)
+    return recs[0] if recs else None
 
 
 def _now() -> str:
@@ -254,40 +275,42 @@ def _commit_snapshot(table: str, manifest: dict, snapshot: dict) -> None:
     _commit_manifest(table, manifest)
 
 
-def _write(
-    table: str, batch_id: str, part: DataFrame, bytes_col: str, extra_lineage: dict, *stats: Column
-) -> dict:
-    """The one commit path of tile and key batches: write ``part`` with its
-    row count, ``bytes_col`` byte sum and ``stats`` observed by the SAME
-    Spark job (no read-back aggregation), then the lineage record with
-    per-file stats from the parquet footers, then the snapshot, then the
-    atomic manifest swap. A kill at any step leaves the previous snapshot
-    intact."""
+# the partition column of the write: each row's batch id
+_BATCH = "batch"
+
+
+def _write(rows: DataFrame, data_dir: str, *totals: Column) -> dict:
+    """The one write job of a commit call: ``rows`` partitioned by batch
+    id into ``data_dir``/batch=<id>/. Dynamic partition overwrite replaces
+    each written batch directory whole and touches no other; a killed job
+    leaves its files in a staging directory of its own. Returns
+    ``totals``, observed by the same job."""
     obs = Observation()
-    data_dir = os.path.join(table, "data", f"batch={batch_id}")
-    part.observe(
-        obs,
-        F.count(F.lit(1)).alias("row_count"),
-        F.coalesce(F.sum(F.length(bytes_col)), F.lit(0)).alias("bytes"),
-        *stats,
-    ).write.mode("overwrite").parquet(data_dir)
-    files = _file_stats(data_dir)
+    rows.observe(obs, *totals).write.partitionBy(_BATCH).mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(data_dir)
+    return obs.get
+
+
+def _commit(table: str, manifest: dict, batch: TileBatch | KeyBatch, stats: dict) -> dict:
+    """Commit one written batch: per-file stats from its parquet footers,
+    the lineage record, the snapshot, then the atomic manifest swap."""
+    files = _file_stats(os.path.join(table, "data", f"{_BATCH}={batch.batch_id}"))
     lineage = {
-        "batch_id": batch_id,
-        **extra_lineage,
-        **{k: (int(v) if v is not None else None) for k, v in obs.get.items()},
+        "batch_id": batch.batch_id,
+        **batch.lineage,
+        **stats,
         "committed_at": _now(),
         "n_files": len(files),
         "files": files,
     }
     os.makedirs(os.path.join(table, "_lineage"), exist_ok=True)
-    with open(os.path.join(table, "_lineage", f"batch={batch_id}.json"), "w") as f:
+    with open(os.path.join(table, "_lineage", f"batch={batch.batch_id}.json"), "w") as f:
         json.dump(lineage, f, indent=1, sort_keys=True)
 
-    manifest = read_manifest(table)
     parent = manifest["current_snapshot"]
     sid = parent + 1
-    manifest["batches"][batch_id] = {
+    manifest["batches"][batch.batch_id] = {
         "row_count": lineage["row_count"],
         "bytes": lineage["bytes"],
         "committed_at": lineage["committed_at"],
@@ -297,7 +320,7 @@ def _write(
         "snapshot_id": sid,
         "parent_id": parent if parent > 0 else None,
         "operation": "append",
-        "batch_id": batch_id,
+        "batch_id": batch.batch_id,
         "committed_at": lineage["committed_at"],
         "summary": {
             "added_rows": lineage["row_count"],
@@ -311,31 +334,96 @@ def _write(
     return lineage
 
 
+def _batch_stats(keyed: DataFrame, bytes_col: str, bounds: tuple[str, ...]) -> dict[str, dict]:
+    """Per batch id: row count, ``bytes_col`` byte sum (0 when all null)
+    and the min/max of each column in ``bounds`` — in one Spark job with
+    no Exchange. Each task reduces its Arrow batches by batch id and the
+    Spark driver reduces the partial rows again with the same aggregate
+    (a groupBy would cost a shuffle map stage, which adaptive execution
+    runs as a job of its own)."""
+    ops = {"row_count": "sum", "bytes": "sum", **{f"{c}_{f}": f for c in bounds for f in ("min", "max")}}
+
+    def reduce(t):
+        import pyarrow.compute as pc
+
+        every = pc.ScalarAggregateOptions(min_count=0)
+        g = t.group_by(_BATCH).aggregate([(c, op, every) for c, op in ops.items()])
+        return g.select([_BATCH, *[f"{c}_{op}" for c, op in ops.items()]]).rename_columns([_BATCH, *ops])
+
+    def partials(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            if b.num_rows:
+                yield from reduce(pa.Table.from_batches([b])).to_batches()
+
+    rows = keyed.select(
+        _BATCH,
+        F.lit(1).cast("long").alias("row_count"),
+        F.length(bytes_col).cast("long").alias("bytes"),
+        *[F.col(c).cast("long").alias(f"{c}_{f}") for c in bounds for f in ("min", "max")],
+    )
+    return {r.pop(_BATCH): r for r in reduce(rows.mapInArrow(partials, rows.schema).toArrow()).to_pylist()}
+
+
 def _resume(
-    df: DataFrame, table: str, batches: list, write: Callable, filled: Callable | None = None
+    df: DataFrame,
+    table: str,
+    batches: list,
+    key: Column,
+    bytes_col: str,
+    bounds: tuple[str, ...] = (),
+    commit_empty: bool = False,
 ) -> list[dict]:
-    """The one resumable loop: ``write`` each of ``batches`` not yet
-    committed to ``table``, in plan order. ``df`` is persisted for the
-    loop, so its plan runs once per call and every batch is a scan of
-    the cache; a DataFrame that is already cached is used as is and left
-    cached. ``filled``, when given, is the loop's first action: it maps
-    ``df`` to the ids of the batches that hold data, and the others are
-    skipped. The persist is released even when a batch fails."""
+    """The one commit path of tile and key batches: commit each of
+    ``batches`` not yet committed to ``table``, in plan order, in a fixed
+    number of Spark jobs whatever their count. ``key`` is each row's
+    batch id.
+
+    ``df`` is persisted for the call (a DataFrame that is already cached
+    is used as is and left cached), and its first action, which fills the
+    cache, is one aggregate per batch id (``_batch_stats``). One write job
+    then writes the rows of the uncommitted batches that hold any; its
+    own row and byte totals must equal the aggregate's, or nothing
+    commits. Last, each batch commits in plan order with the aggregate's
+    stats, from one read of the manifest; a batch without rows commits
+    (with no file) only when ``commit_empty``. The persist is released
+    even when a step fails; a kill at any step leaves the last committed
+    snapshot intact."""
+    if _BATCH in df.columns:
+        raise ValueError(f"a committed frame may not have a {_BATCH!r} column")
     os.makedirs(table, exist_ok=True)
-    todo = resume_plan(table, batches)
+    manifest = read_manifest(table)
+    todo = [b for b in batches if b.batch_id not in manifest["batches"]]
     if not todo:
         return []
     owned = df.storageLevel == StorageLevel.NONE
     if owned:
         df.persist()
     try:
-        if filled is not None:
-            present = filled(df)
-            todo = [b for b in todo if b.batch_id in present]
-        return [write(table, b, df) for b in todo]
+        keyed = df.withColumn(_BATCH, key)
+        agg = _batch_stats(keyed, bytes_col, bounds)
+        ids = [b.batch_id for b in todo if b.batch_id in agg]
+        for b in todo:  # an uncommitted batch's leftovers go, rewritten or empty
+            shutil.rmtree(os.path.join(table, "data", f"{_BATCH}={b.batch_id}"), ignore_errors=True)
+        if ids:
+            totals = [
+                F.count(F.lit(1)).alias("row_count"),
+                F.coalesce(F.sum(F.length(bytes_col)), F.lit(0)).alias("bytes"),
+            ]
+            seen = _write(keyed.filter(F.col(_BATCH).isin(ids)), os.path.join(table, "data"), *totals)
+            want = {t: sum(agg[i][t] for i in ids) for t in seen}
+            if seen != want:
+                raise RuntimeError(f"write saw {seen}, aggregate counted {want}: nothing committed")
     finally:
         if owned:
             df.unpersist(blocking=True)
+    empty = {"row_count": 0, "bytes": 0}
+    return [
+        _commit(table, manifest, b, agg.get(b.batch_id, empty))
+        for b in todo
+        if commit_empty or b.batch_id in agg
+    ]
 
 
 def convert_resumable(
@@ -345,21 +433,13 @@ def convert_resumable(
     max_zoom: int,
     block_bits: int = 6,
 ) -> list[dict]:
-    """Run (or resume) a whole-pyramid write batch-by-batch. Re-invoking
-    after a kill skips every committed batch.
-
-    The pyramid is rendered once per call: the first action, one
-    aggregate of its distinct (z, x >> bits, y >> bits) blocks, fills the
-    persisted tiles, and only the blocks that hold tiles are written, in
-    static plan order. Empty blocks commit no snapshot."""
-
-    def filled(df: DataFrame) -> set[str]:
-        blocks = df.select(
-            "z", F.shiftright("x", block_bits), F.shiftright("y", block_bits)
-        ).distinct()
-        return {TileBatch(*r, block_bits).batch_id for r in blocks.collect()}
-
-    return _resume(tiles, table, plan_batches(min_zoom, max_zoom, block_bits), write_batch, filled)
+    """Run (or resume) a whole-pyramid write; re-invoking after a kill
+    skips every committed batch. The batches are the static plan's blocks
+    that hold tiles, committed in plan order; empty blocks commit no
+    snapshot. The pyramid is rendered once per call, and the call runs
+    one aggregate and one write job whatever its batch count."""
+    batches = plan_batches(min_zoom, max_zoom, block_bits)
+    return _resume(tiles, table, batches, _tile_key(block_bits), "tile", ("x", "y"))
 
 
 def keyed_resumable(
@@ -370,8 +450,8 @@ def keyed_resumable(
     bytes_col: str = "text",
 ) -> list[dict]:
     """Run (or resume) a keyed-table write bucket-by-bucket — the
-    curation-pipeline counterpart of convert_resumable, with the same
-    evaluate-once loop. Every bucket commits, empty or not. Refuses to
+    curation-pipeline counterpart of convert_resumable, on the same
+    commit path. Every bucket commits, empty or not. Refuses to
     resume a table committed with a different bucket count (the
     bucket->batch mapping would no longer line up and rows would
     duplicate)."""
@@ -382,8 +462,8 @@ def keyed_resumable(
             f"{table} has batches {sorted(stale)} from a different n_buckets; "
             f"resume must reuse the original bucket count"
         )
-    write = functools.partial(write_key_batch, key_col=key_col, bytes_col=bytes_col)
-    return _resume(df, table, plan_key_batches(n_buckets), write)
+    key = _bucket_key(key_col, n_buckets)
+    return _resume(df, table, plan_key_batches(n_buckets), key, bytes_col, commit_empty=True)
 
 
 def plan_files(

@@ -11,17 +11,22 @@ A ``.tar.gz``/``.tgz``/``.tar.br`` archive is decompressed once to a
 scratch file in the system temporary directory first: compressed streams
 don't support random access, and the reference reads tars fully on one
 node too — the win here is that the tile BYTES are read by executors in
-parallel afterwards.
+parallel afterwards. A process keeps one scratch file per archive
+(path, size, mtime), since executors read it lazily on every action, and
+removes them all when the interpreter exits.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import gzip
 import io
 import os
 import shutil
 import tarfile
 import tempfile
+import threading
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
@@ -88,6 +93,35 @@ def _parse_tile_name(name: str) -> tuple[int, int, int, str, str] | None:
     return z, x, y, fmt, (codec if codec != "none" else default_codec)
 
 
+# (archive path, size, mtime) -> its decompressed scratch .tar
+_SCRATCH: dict[tuple[str, int, int], str] = {}
+_SCRATCH_LOCK = threading.Lock()
+
+
+@atexit.register
+def _remove_scratch() -> None:
+    for path in _SCRATCH.values():
+        with contextlib.suppress(OSError):
+            os.remove(path)
+
+
+def _scratch_tar(path: str) -> str:
+    """The decompressed copy of the archive at ``path``, made on first use."""
+    st = os.stat(path)
+    key = (path, st.st_size, st.st_mtime_ns)
+    with _SCRATCH_LOCK:
+        if key not in _SCRATCH:
+            fd, plain = tempfile.mkstemp(suffix=".tar")
+            try:
+                with os.fdopen(fd, "wb") as out, open_tar(path) as src:
+                    shutil.copyfileobj(src, out)
+            except BaseException:
+                os.remove(plain)
+                raise
+            _SCRATCH[key] = plain
+        return _SCRATCH[key]
+
+
 class TarReader:
     """A tar / tar.gz / tar.br of z/x/y.<ext> entries for the container
     scan; a compressed archive is decompressed to a scratch .tar here."""
@@ -95,9 +129,7 @@ class TarReader:
     def __init__(self, path: str):
         self.path = self.plain = os.path.abspath(path)
         if tar_codec(path):
-            fd, self.plain = tempfile.mkstemp(suffix=".tar")
-            with os.fdopen(fd, "wb") as out, open_tar(self.path) as src:
-                shutil.copyfileobj(src, out)
+            self.plain = _scratch_tar(self.path)
 
     def units(self) -> pd.DataFrame:
         """The scan's read units: one row per tile member, in archive order."""

@@ -36,6 +36,7 @@ equi-join (spatial/cells.py) — same two-stage shape as the reference.
 
 from __future__ import annotations
 
+import itertools
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -62,22 +63,28 @@ class Polygon:
     kind: str
     rings: list[list[tuple[float, float]]]
 
+    def _vertices(self) -> list[np.ndarray]:
+        """Each non-empty ring's vertices as an (n, 2) float64 array."""
+        return [
+            np.fromiter(itertools.chain.from_iterable(r), np.float64, 2 * len(r)).reshape(-1, 2)
+            for r in self.rings
+            if len(r)
+        ]
+
     def edges(self) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-        x1, y1, x2, y2 = [], [], [], []
-        for ring in self.rings:
-            n = len(ring)
-            for i in range(n):
-                a = ring[i]
-                b = ring[(i + 1) % n]
-                if a == b:
-                    continue  # skip zero-length edges
-                x1.append(a[0]); y1.append(a[1]); x2.append(b[0]); y2.append(b[1])
-        return (np.array(x1), np.array(y1), np.array(x2), np.array(y2))
+        """float64 (x1, y1, x2, y2) of every ring's edges, each ring closed
+        back to its first vertex; zero-length edges are skipped."""
+        parts = [np.empty((4, 0))]
+        for a in self._vertices():
+            b = np.roll(a, -1, axis=0)
+            keep = (a != b).any(axis=1)
+            parts.append(np.concatenate([a[keep].T, b[keep].T]))
+        return tuple(np.concatenate(parts, axis=1))
 
     def bbox(self) -> tuple[float, float, float, float]:
-        xs = [p[0] for r in self.rings for p in r]
-        ys = [p[1] for r in self.rings for p in r]
-        return min(xs), min(ys), max(xs), max(ys)
+        xy = np.concatenate(self._vertices())
+        x, y = xy[:, 0], xy[:, 1]
+        return float(x.min()), float(y.min()), float(x.max()), float(y.max())
 
 
 # Bands per polygon: about one per four edges (a few edges per band on a
