@@ -22,7 +22,10 @@ from versatiles_rs_spark.spatial.pip import (
     FULLY_INSIDE,
     FULLY_OUTSIDE,
     PARTIAL,
+    _sql_double,
     band_index,
+    bbox_prefilter_sql,
+    prepare,
 )
 
 
@@ -280,6 +283,29 @@ def test_classify_tiles():
             assert not corners_in.any()
 
 
+def test_cell_covers_and_tile_classes_are_pinned():
+    """sha1 of the z5/z7 cell covers and a z8 tile-class grid of every
+    sample polygon and the benchmark's rings; a prepared polygon classifies
+    exactly as the polygon itself."""
+    import hashlib
+
+    from perfbench.gen import dense_rings
+
+    from versatiles_rs_spark.spatial.cells import polygon_cell_cover
+
+    h = hashlib.sha1()
+    xs, ys = np.meshgrid(np.arange(256), np.arange(256))
+    for poly in sample_polygons() + [Polygon(9, "d", "ring", [r]) for r in dense_rings(1)]:
+        for z in (5, 7):
+            ids, classes = polygon_cell_cover(poly, z)
+            h.update(ids.tobytes())
+            h.update(classes.tobytes())
+        h.update(classify_tiles(8, xs.ravel(), ys.ravel(), poly).tobytes())
+        assert np.array_equal(classify_tiles(8, xs.ravel(), ys.ravel(), prepare(poly)),
+                              classify_tiles(8, xs.ravel(), ys.ravel(), poly))
+    assert h.hexdigest() == "20b03b53684b70ab74c30871fd7a6e9fe37b28db"
+
+
 def test_pip_join_dataframe(spark):
     import pandas as pd
 
@@ -309,3 +335,92 @@ def test_pip_join_multi_polygon_membership(spark):
     df = spark.createDataFrame(pd.DataFrame({"doc_id": [0], "lon": [6.0], "lat": [0.0]}))
     out = pip_join(df, sample_polygons()).toPandas()
     assert sorted(out["poly_name"]) == ["africa_tri", "sliver"]
+
+
+# --- the pip_join bbox prefilter ------------------------------------------
+
+_BOX_EDGES = [-np.inf, np.inf, -0.0, 0.0, 5e-324, -5e-324, 1.5, -1.5, 1e300]
+_coord = st.one_of(st.sampled_from(_BOX_EDGES), st.floats(-200.0, 200.0, allow_nan=False))
+
+
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _column_prefilter(lon_col: str, lat_col: str, bboxes):
+    """The prefilter as pip_join built it before: one Column op at a time."""
+    lon, lat = F.col(_quoted(lon_col)), F.col(_quoted(lat_col))
+    cond = None
+    for x0, y0, x1, y1 in bboxes:
+        c = (lon >= x0) & (lon <= x1) & (lat >= y0) & (lat <= y1)
+        cond = c if cond is None else (cond | c)
+    return cond
+
+
+@st.composite
+def _boxes_and_points(draw):
+    boxes = draw(st.lists(st.tuples(_coord, _coord, _coord, _coord), min_size=1, max_size=3))
+    xs = [v for b in boxes for v in (b[0], b[2])]
+    ys = [v for b in boxes for v in (b[1], b[3])]
+    # points on the box edges, anywhere, NaN and NULL
+    px = st.one_of(st.sampled_from(xs), _coord, st.just(float("nan")), st.none())
+    py = st.one_of(st.sampled_from(ys), _coord, st.just(float("nan")), st.none())
+    points = draw(st.lists(st.tuples(px, py), min_size=1, max_size=24))
+    names = draw(st.sampled_from([("lon", "lat"), ("my lon", "lat"), ("lo`n", "l``a t")]))
+    return boxes, points, names
+
+
+@settings(max_examples=40, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(case=_boxes_and_points())
+def test_one_expression_prefilter_keeps_the_column_built_rows(spark, case):
+    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+    boxes, points, (lon_col, lat_col) = case
+    schema = StructType([StructField("i", IntegerType()), StructField(lon_col, DoubleType()),
+                         StructField(lat_col, DoubleType())])
+    df = spark.createDataFrame([(i, x, y) for i, (x, y) in enumerate(points)], schema)
+    rows = df.select(
+        "i",
+        F.expr(bbox_prefilter_sql(lon_col, lat_col, boxes)).alias("one"),
+        _column_prefilter(lon_col, lat_col, boxes).alias("ops"),
+    ).collect()
+    assert [r["one"] for r in sorted(rows)] == [r["ops"] for r in sorted(rows)]
+
+
+def test_prefilter_literals_round_trip_exactly(spark):
+    values = [0.0, -0.0, 5e-324, -5e-324, 1e300, 1.7976931348623157e308, 0.1, 1 / 3,
+              -2.5e-10, np.inf, -np.inf]
+    row = spark.range(1).select(
+        *[F.expr(_sql_double(v)).alias(f"v{i}") for i, v in enumerate(values)]).first()
+    for i, v in enumerate(values):
+        got = row[f"v{i}"]
+        assert got == v and np.signbit(got) == np.signbit(v), (v, got)
+    assert np.isnan(spark.range(1).select(F.expr(_sql_double(np.nan)).alias("v")).first()["v"])
+
+
+def test_pip_join_rows_are_pinned(spark):
+    """sha1 of the sorted rows of an inner, a left and a slim-payload join of
+    6,000 seeded points (half in the boxes of three 2,880-vertex rings)."""
+    import hashlib
+
+    import pandas as pd
+
+    from perfbench import gen
+
+    rings = gen.dense_rings(3)
+    pts = gen.points(3, 6000, clustered=0.0)
+    lon, lat = pts["lon"], pts["lat"]
+    lon[:3000], lat[:3000] = gen.ring_points(3, 3000, rings)
+    df = spark.createDataFrame(pd.DataFrame({"doc_id": np.arange(6000), "lon": lon, "lat": lat}))
+    polys = sample_polygons() + [Polygon(100 + i, f"dense{i}", "ring", [r])
+                                 for i, r in enumerate(rings)]
+
+    def digest(frame):
+        rows = sorted(tuple((k, repr(v)) for k, v in r.asDict().items()) for r in frame.collect())
+        return len(rows), hashlib.sha1(repr(rows).encode()).hexdigest()
+
+    assert digest(pip_join(df, polys)) == (4781, "c026316f26fe14b8ed5493eb5fc614a3f99b8dd7")
+    assert digest(pip_join(df, polys, how="left")) == (
+        7282, "7217396aa3da84a4a4606ff54b69cc5c3ad13224")
+    assert digest(pip_join(df, polys, payload_cols=["doc_id"])) == (
+        4781, "1d50cbf4a7297b63ecd789b7d6d5c2518beaffa0")

@@ -25,3 +25,9 @@ Layout
 """
 
 __version__ = "0.1.0"
+
+# Spark's Python workers run importlib.invalidate_caches() before every
+# task; keep it from re-reading the unchanged pyspark.zip each time.
+from versatiles_rs_spark import zipimport_cache as _zipimport_cache  # noqa: E402
+
+_zipimport_cache.install()

@@ -32,9 +32,9 @@ from versatiles_rs_spark.spatial.pip import (
     FULLY_INSIDE,
     FULLY_OUTSIDE,
     Polygon,
-    band_index,
     classify_tiles,
     pip_contains_np,
+    prepare,
 )
 from versatiles_rs_spark.tile_math.coords import tile_geo_bbox_np
 
@@ -83,11 +83,11 @@ def raster_mask(
     test, results OR-ed) — NOT the even-odd rule over the concatenated ring
     set, which would wrongly unmask regions where two polygons overlap."""
     polys = [poly] if isinstance(poly, Polygon) else list(poly)
-    indexes = [band_index(p.edges()) for p in polys]
+    shapes = [prepare(p) for p in polys]
 
     def fn(t: Tile) -> Tile | None:
         xs, ys = np.array([t.x]), np.array([t.y])
-        classes = [classify_tiles(t.z, xs, ys, p)[0] for p in polys]
+        classes = [classify_tiles(t.z, xs, ys, shape)[0] for shape in shapes]
         if all(c == FULLY_OUTSIDE for c in classes):
             return None
         img = to_rgba(t.image())
@@ -99,10 +99,10 @@ def raster_mask(
         lats = north - (np.arange(h) + 0.5) / h * (north - south)
         gx, gy = np.meshgrid(lons, lats)
         inside = np.zeros(h * w, dtype=bool)
-        for cls, index in zip(classes, indexes):
+        for cls, shape in zip(classes, shapes):
             if cls == FULLY_OUTSIDE:
                 continue
-            inside |= pip_contains_np(gx.ravel(), gy.ravel(), index)
+            inside |= pip_contains_np(gx.ravel(), gy.ravel(), shape.index)
         inside = inside.reshape(h, w)
         alpha = inside.astype(np.float64)
         for _ in range(smooth):

@@ -128,10 +128,15 @@ def _decode_numeric_entities_sql(t: str) -> str:
         f"CASE WHEN {cp} <= 0 OR {cp} BETWEEN 55296 AND 57343 OR {cp} > 1114111 "
         f"THEN chr(65533) ELSE chr(CAST({cp} AS INTEGER)) END"
     )
+    # n matches split the text into n + 1 parts; the decoded list gets an
+    # explicit trailing NULL so both lists have n + 1 entries and list_zip
+    # never pads. DuckDB 1.0.0 segfaults now and then when list_zip pads
+    # the shorter list under these lambdas; equal lengths give the same
+    # rows and never crashed.
     return (
         "coalesce(array_to_string(list_transform(list_zip("
         f"string_split_regex({t}, '{_NUM_ENTITY}'), "
-        f"list_transform(regexp_extract_all({t}, '{_NUM_ENTITY}', 1), e -> {dec})), "
+        f"list_append(list_transform(regexp_extract_all({t}, '{_NUM_ENTITY}', 1), e -> {dec}), NULL)), "
         "x -> x[1] || coalesce(x[2], '')), ''), '')"
     )
 

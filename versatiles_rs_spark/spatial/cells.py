@@ -37,6 +37,7 @@ from versatiles_rs_spark.spatial.pip import (
     band_index,
     classify_tiles,
     pip_contains_np,
+    prepare,
 )
 from versatiles_rs_spark.tile_math.coords import lonlat_to_tile_cols, lonlat_to_tile_np
 
@@ -59,12 +60,13 @@ def polygon_cell_cover(poly: Polygon, zoom: int) -> tuple[np.ndarray, np.ndarray
     Returns (cell_ids, classes) with class FULLY_INSIDE or PARTIAL.
     Quadtree descent: start at z0 and only subdivide PARTIAL cells — the
     TileCover/TileQuadtree auto-upgrade pattern (tile_cover/mod.rs:48)."""
+    shape = prepare(poly)
     frontier = [(0, 0, 0)]  # (z, x, y) partial cells to refine
     inside: list[tuple[int, int]] = []
     partial: list[tuple[int, int]] = []
     while frontier:
         zc, xc, yc = frontier.pop()
-        cls = classify_tiles(zc, np.array([xc]), np.array([yc]), poly)[0]
+        cls = classify_tiles(zc, np.array([xc]), np.array([yc]), shape)[0]
         if cls == FULLY_OUTSIDE:
             continue
         if cls == FULLY_INSIDE:

@@ -37,6 +37,7 @@ equi-join (spatial/cells.py) — same two-stage shape as the reference.
 from __future__ import annotations
 
 import itertools
+import math
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -221,34 +222,75 @@ def _segments_intersect_rect(
     return (~reject & (t0 <= t1)).any(axis=1)
 
 
-def classify_tiles(z: int, x: np.ndarray, y: np.ndarray, poly: Polygon) -> np.ndarray:
+@dataclass(frozen=True, eq=False)
+class PreparedPolygon:
+    """What ``classify_tiles`` needs of one polygon (its vertex bbox and its
+    band index, which holds the edges), built once by ``prepare`` for a
+    caller that classifies many tiles one call at a time."""
+
+    bbox: tuple[float, float, float, float]
+    index: BandIndex
+
+
+def prepare(poly: Polygon) -> PreparedPolygon:
+    return PreparedPolygon(poly.bbox(), band_index(poly.edges()))
+
+
+def classify_tiles(
+    z: int, x: np.ndarray, y: np.ndarray, poly: Polygon | PreparedPolygon
+) -> np.ndarray:
     """Classify tiles against one polygon (mask_geometry.rs:237).
 
     Sound for arbitrary (incl. concave) polygons: if no polygon edge touches
     the tile rect, the tile is uniformly inside or outside, decided by one
-    corner's PIP; otherwise PARTIAL."""
+    corner's PIP; otherwise PARTIAL. Pass ``prepare(poly)`` when calling
+    repeatedly for the same polygon."""
     from versatiles_rs_spark.tile_math.coords import tile_geo_bbox_np
 
+    shape = poly if isinstance(poly, PreparedPolygon) else prepare(poly)
     x = np.atleast_1d(np.asarray(x))
     y = np.atleast_1d(np.asarray(y))
     w, s, e, n = tile_geo_bbox_np(z, x, y)
-    bx0, by0, bx1, by1 = poly.bbox()
+    bx0, by0, bx1, by1 = shape.bbox
     out = np.full(len(x), PARTIAL, dtype=np.int8)
     disjoint = (e < bx0) | (w > bx1) | (n < by0) | (s > by1)
     out[disjoint] = FULLY_OUTSIDE
 
-    edges = poly.edges()
+    idx = shape.index
     todo = ~disjoint
     if todo.any():
         cw, cs, ce, cn = w[todo], s[todo], e[todo], n[todo]
-        touched = _segments_intersect_rect(edges, cw, cs, ce, cn)
+        touched = _segments_intersect_rect((idx.x1, idx.y1, idx.x2, idx.y2), cw, cs, ce, cn)
         # untouched tiles are uniform: sample the center point
-        center_in = pip_contains_np((cw + ce) / 2.0, (cs + cn) / 2.0, edges)
+        center_in = pip_contains_np((cw + ce) / 2.0, (cs + cn) / 2.0, idx)
         sub = np.full(todo.sum(), PARTIAL, dtype=np.int8)
         sub[~touched & center_in] = FULLY_INSIDE
         sub[~touched & ~center_in] = FULLY_OUTSIDE
         out[todo] = sub
     return out
+
+
+def _sql_name(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_double(v: float) -> str:
+    """A SQL literal of exactly ``v``: ``repr`` round-trips every finite
+    double (``-0.0`` and subnormals included) as a ``D`` literal."""
+    v = float(v)
+    return f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
+
+
+def bbox_prefilter_sql(lon_col: str, lat_col: str, bboxes) -> str:
+    """One SQL condition: the point lies in any of ``bboxes`` (closed boxes
+    ``(x0, y0, x1, y1)``). Built as one expression string, so planning it
+    costs one parse, not a py4j round trip per ``Column`` operator."""
+    lon, lat = _sql_name(lon_col), _sql_name(lat_col)
+    return " OR ".join(
+        f"({lon} >= {_sql_double(x0)} AND {lon} <= {_sql_double(x1)}"
+        f" AND {lat} >= {_sql_double(y0)} AND {lat} <= {_sql_double(y1)})"
+        for x0, y0, x1, y1 in bboxes
+    )
 
 
 _PIP_EXTRA = [
@@ -292,21 +334,15 @@ def pip_join(
         out_names = list(payload_cols)
     else:
         out_names = [f.name for f in points.schema.fields]
+    shapes = [prepare(p) for p in polygons]
     if how == "inner" and polygons:
         # JVM-side bbox prefilter: a point outside every polygon's bbox can
         # never match an inner join, so drop it INSIDE codegen before the
         # Arrow boundary — the JVM->Python transfer is the measured
         # bottleneck and this shrinks it by the non-candidate fraction.
         # The exact per-polygon bbox test still runs in the probe.
-        cond = None
-        for p in polygons:
-            bx0, by0, bx1, by1 = p.bbox()
-            c = (
-                (F.col(lon_col) >= bx0) & (F.col(lon_col) <= bx1)
-                & (F.col(lat_col) >= by0) & (F.col(lat_col) <= by1)
-            )
-            cond = c if cond is None else (cond | c)
-        points = points.filter(cond)
+        cond = bbox_prefilter_sql(lon_col, lat_col, [s.bbox for s in shapes])
+        points = points.filter(F.expr(cond))
     # scale hygiene: a zero-shuffle map pipeline inherits the source's
     # partitioning; a single fat parquet file would serialize the whole probe
     # onto one task. Spread (on the already-projected slim columns) to at
@@ -322,13 +358,11 @@ def pip_join(
     # for such inputs, and it is bounded by the post-prefilter volume. At
     # production scale (many files x many row groups) the condition is
     # false and no exchange exists.
+    # (partitions counted on the JVM's RDD: no Python RDD is built)
     target = spark.sparkContext.defaultParallelism
-    if points.rdd.getNumPartitions() < target:
+    if points._jdf.rdd().getNumPartitions() < target:
         points = points.repartition(target)
-    payload = [
-        (p.feature_id, p.name, band_index(p.edges()), p.bbox())
-        for p in polygons
-    ]
+    payload = [(p.feature_id, p.name, s.index, s.bbox) for p, s in zip(polygons, shapes)]
     bc = spark.sparkContext.broadcast(payload)
 
     base_fields = [f for f in points.schema.fields if f.name in out_names]
