@@ -6,6 +6,8 @@ import json
 import os
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
@@ -76,8 +78,8 @@ def _tile_rows(df) -> list:
 
 def test_render_runs_once_per_commit(tiles, tmp_path, spark, sf_dir):
     """convert_resumable renders an uncached pyramid once for all of its
-    batches, not once per batch; it releases its own persist and leaves a
-    caller's cache in place."""
+    batches, not once per batch; it persists nothing and leaves a caller's
+    cache in place."""
     rendered = spark.sparkContext.accumulator(0)
 
     def count_rows(batches):
@@ -544,7 +546,7 @@ BITS = 1  # 2x2-tile blocks: at z0-4, 86 static blocks, some of them empty
 
 def test_kill_inside_write_job_resumes_exact(tiles, tmp_path, spark, monkeypatch):
     """A task failure inside the one write job commits nothing; the resume,
-    also past the temporary files of a hard-killed job, gives the
+    also past the staged files of a hard-killed job, gives the
     uninterrupted table (tiles, batch ids and order, row counts)."""
     import versatiles_rs_spark.lineage as lineage
     from pyspark import TaskContext
@@ -552,28 +554,28 @@ def test_kill_inside_write_job_resumes_exact(tiles, tmp_path, spark, monkeypatch
     full = str(tmp_path / "full")
     convert_resumable(tiles, full, 0, MAXZ, block_bits=BITS)
 
-    real = lineage._write
+    real = lineage._stage
 
-    def dying(rows, data_dir, *totals):
+    def dying(keyed, staging, *args):
         def fail(batches):
             for pdf in batches:
                 if TaskContext.get().partitionId() == 1:
                     raise RuntimeError("killed")
                 yield pdf
 
-        return real(rows.mapInPandas(fail, rows.schema), data_dir, *totals)
+        return real(keyed.mapInPandas(fail, keyed.schema), staging, *args)
 
     killed = str(tmp_path / "killed")
-    monkeypatch.setattr(lineage, "_write", dying)
+    monkeypatch.setattr(lineage, "_stage", dying)
     with pytest.raises(Exception, match="killed"):
         convert_resumable(tiles, killed, 0, MAXZ, block_bits=BITS)
     monkeypatch.undo()
     assert read_manifest(killed)["batches"] == {}
     assert not os.path.exists(os.path.join(killed, "_lineage"))
-    # a hard kill also leaves the output committer's task files behind
+    # a hard kill also leaves the write tasks' staged files behind
     some = next(iter(read_manifest(full)["batches"]))
-    for leftover in ("_temporary/0/task_killed", ".spark-staging-killed"):
-        tiles.write.parquet(os.path.join(killed, "data", leftover, f"batch={some}"))
+    for leftover in ("_staging/killed-call", "_staging/other-call"):
+        tiles.write.parquet(os.path.join(killed, leftover, f"batch={some}"))
 
     recs = convert_resumable(tiles, killed, 0, MAXZ, block_bits=BITS)
     assert len(recs) == len(read_manifest(full)["batches"])
@@ -636,14 +638,18 @@ def test_resume_leaves_committed_batch_files_alone(tiles, tmp_path, monkeypatch)
 
 
 def test_write_total_mismatch_raises_before_any_commit(tiles, tmp_path, monkeypatch):
-    """When the write job sees other totals than the aggregate counted (a
+    """When a write task reports another row count than its file holds (a
     row lost between the two), the call raises and nothing commits."""
     import versatiles_rs_spark.lineage as lineage
 
-    real = lineage._write
-    monkeypatch.setattr(
-        lineage, "_write", lambda rows, d, *t: real(rows.filter("z > 0"), d, *t)
-    )
+    real = lineage._stage
+
+    def miscounted(*args):
+        rows = real(*args)
+        rows[-1]["row_count"] += 1
+        return rows
+
+    monkeypatch.setattr(lineage, "_stage", miscounted)
     table = str(tmp_path / "t")
     with pytest.raises(RuntimeError, match="nothing committed"):
         convert_resumable(tiles, table, 0, MAXZ, block_bits=BITS)
@@ -655,9 +661,9 @@ def test_write_total_mismatch_raises_before_any_commit(tiles, tmp_path, monkeypa
 
 
 def test_one_call_runs_a_fixed_number_of_jobs(tmp_path, spark, sf_dir):
-    """A commit call runs at most 4 Spark jobs (render included), whatever
-    its batch count: one per shuffle of the render, the aggregate and the
-    write."""
+    """A commit call runs at most 2 Spark jobs (render included), whatever
+    its batch count: the render's shuffle and the write; a keyed call
+    without a shuffle runs the write alone."""
     from versatiles_rs_spark.lineage import keyed_resumable
 
     sc = spark.sparkContext
@@ -673,8 +679,8 @@ def test_one_call_runs_a_fixed_number_of_jobs(tmp_path, spark, sf_dir):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(recs) > 4 and len(keyed) == 8
-    assert len(sc.statusTracker().getJobIdsForGroup("lineage-convert")) <= 4
-    assert len(sc.statusTracker().getJobIdsForGroup("lineage-keyed")) <= 4
+    assert len(sc.statusTracker().getJobIdsForGroup("lineage-convert")) <= 2
+    assert len(sc.statusTracker().getJobIdsForGroup("lineage-keyed")) <= 1
 
 
 def test_batch_column_refused(tmp_path, spark, sf_dir):
@@ -685,3 +691,149 @@ def test_batch_column_refused(tmp_path, spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     with pytest.raises(ValueError, match="'batch' column"):
         keyed_resumable(docs.withColumn("batch", F.lit(1)), str(tmp_path / "k"), n_buckets=2)
+
+
+def test_unreported_staged_file_never_committed(tiles, tmp_path, spark, monkeypatch):
+    """Only the files the write tasks report move into data/: a stray
+    staged file (the output of a failed task attempt) never does, and the
+    staging directory is gone after a call, successful or failed."""
+    import shutil
+
+    import versatiles_rs_spark.lineage as lineage
+
+    full = str(tmp_path / "full")
+    convert_resumable(tiles, full, 0, MAXZ, block_bits=BITS)
+    real = lineage._stage
+
+    def with_strays(keyed, staging, *args):
+        rows = real(keyed, staging, *args)
+        for r in rows:  # another attempt of the same task wrote the same rows
+            shutil.copy(r["path"], os.path.join(os.path.dirname(r["path"]), "part-99999-1-0000.parquet"))
+        return rows
+
+    table = str(tmp_path / "t")
+    monkeypatch.setattr(lineage, "_stage", with_strays)
+    convert_resumable(tiles, table, 0, MAXZ, block_bits=BITS)
+    monkeypatch.undo()
+    names = {n for _, _, files in os.walk(os.path.join(table, "data")) for n in files}
+    assert names and not any(n.startswith("part-99999") for n in names)
+    assert not os.path.exists(os.path.join(table, "_staging"))
+    assert _table_state(spark, table) == _table_state(spark, full)
+
+    def dying(*args):
+        real(*args)
+        raise RuntimeError("killed")
+
+    failed = str(tmp_path / "failed")
+    monkeypatch.setattr(lineage, "_stage", dying)
+    with pytest.raises(RuntimeError, match="killed"):
+        convert_resumable(tiles, failed, 0, MAXZ, block_bits=BITS)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(failed, "_staging"))
+    assert not os.path.exists(os.path.join(failed, "data"))
+    assert read_manifest(failed)["batches"] == {}
+
+
+def _batch_stats(table: str) -> dict:
+    """Per committed batch: row count, byte sum and x/y bounds."""
+    keys = ("row_count", "bytes", "x_min", "x_max", "y_min", "y_max")
+    return {r["batch_id"]: {k: r.get(k) for k in keys} for r in _lineage_records(table)}
+
+
+def _lineage_records(table: str) -> list[dict]:
+    d = os.path.join(table, "_lineage")
+    names = sorted(os.listdir(d)) if os.path.isdir(d) else []
+    return [json.load(open(os.path.join(d, n))) for n in names]
+
+
+def test_flush_budget_splits_a_batch_into_part_files(tiles, tmp_path, spark, monkeypatch):
+    """A task that buffers more than the flush budget writes a batch's
+    rows as several part files; the committed rows and the per-batch stats
+    are those of the one-file-per-task write."""
+    import versatiles_rs_spark.lineage as lineage
+
+    one = tiles.coalesce(1)
+    full = str(tmp_path / "full")
+    convert_resumable(one, full, 0, MAXZ)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    monkeypatch.setattr(lineage, "_FLUSH_BYTES", 1)
+    split = str(tmp_path / "split")
+    try:
+        convert_resumable(one, split, 0, MAXZ)
+    finally:
+        spark.conf.set(key, before)
+    files = {r["batch_id"]: r["n_files"] for r in _lineage_records(split)}
+    assert all(r["n_files"] == 1 for r in _lineage_records(full))
+    assert max(files.values()) > 1
+    for rec in _lineage_records(split):
+        assert sum(f["rows"] for f in rec["files"]) == rec["row_count"]
+    assert _batch_stats(split) == _batch_stats(full)
+    assert _table_state(spark, split) == _table_state(spark, full)
+
+
+_TEXT = st.one_of(st.none(), st.just(""), st.text(alphabet="aZ é€中😀́", max_size=6))
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    texts=st.lists(_TEXT, max_size=40),
+    n_buckets=st.integers(1, 6),
+    small=st.booleans(),
+)
+def test_written_stats_match_spark_aggregates(spark, tmp_path_factory, texts, n_buckets, small):
+    """The write tasks' per-batch row counts and byte sums equal a Spark
+    groupBy of count and sum(length(text)) — characters, not UTF-8 bytes,
+    of a string column; 0 for a bucket of nulls or without rows — whether
+    or not a batch spans several part files."""
+    import versatiles_rs_spark.lineage as lineage
+    from versatiles_rs_spark.lineage import keyed_resumable
+
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id bigint, text string")
+    bucket = F.format_string("k%dof%d", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)), F.lit(n_buckets))
+    want = {f"k{b}of{n_buckets}": {"row_count": 0, "bytes": 0} for b in range(n_buckets)}
+    for r in df.groupBy(bucket.alias("b")).agg(
+        F.count(F.lit(1)).alias("n"), F.coalesce(F.sum(F.length("text")), F.lit(0)).alias("bytes")
+    ).collect():
+        want[r["b"]] = {"row_count": r["n"], "bytes": r["bytes"]}
+
+    table = str(tmp_path_factory.mktemp("keyed"))
+    budget = lineage._FLUSH_BYTES
+    lineage._FLUSH_BYTES = 1 if small else budget
+    try:
+        keyed_resumable(df.repartition(2), table, n_buckets=n_buckets)
+    finally:
+        lineage._FLUSH_BYTES = budget
+    got = {b: {k: v for k, v in s.items() if k in ("row_count", "bytes")} for b, s in _batch_stats(table).items()}
+    assert got == want
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    cells=st.lists(
+        st.tuples(st.integers(0, 3), st.integers(0, 7), st.integers(0, 7), st.binary(max_size=5)),
+        max_size=40,
+    ),
+)
+def test_written_tile_bounds_match_spark_aggregates(spark, tmp_path_factory, cells):
+    """Per tile batch: row count, tile byte sum and x/y bounds of the
+    write tasks equal a Spark groupBy of the same rows; blocks without
+    tiles commit nothing."""
+    rows = [(z, x % (1 << z), y % (1 << z), "mvt", "none", t, 1) for z, x, y, t in cells]
+    df = spark.createDataFrame(rows, TILE_SCHEMA).repartition(3)
+    bits = 1
+    key = F.format_string("z%d_x%d_y%d", "z", F.shiftright("x", bits), F.shiftright("y", bits))
+    want = {
+        r["b"]: {k: r[k] for k in ("row_count", "bytes", "x_min", "x_max", "y_min", "y_max")}
+        for r in df.groupBy(key.alias("b")).agg(
+            F.count(F.lit(1)).alias("row_count"),
+            F.coalesce(F.sum(F.length("tile")), F.lit(0)).alias("bytes"),
+            F.min("x").alias("x_min"), F.max("x").alias("x_max"),
+            F.min("y").alias("y_min"), F.max("y").alias("y_max"),
+        ).collect()
+    }
+    table = str(tmp_path_factory.mktemp("tiles"))
+    recs = convert_resumable(df, table, 0, 3, block_bits=bits)
+    assert [r["batch_id"] for r in recs] == [b.batch_id for b in plan_batches(0, 3, bits) if b.batch_id in want]
+    assert _batch_stats(table) == want

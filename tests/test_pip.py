@@ -22,11 +22,11 @@ from versatiles_rs_spark.spatial.pip import (
     FULLY_INSIDE,
     FULLY_OUTSIDE,
     PARTIAL,
-    _sql_double,
     band_index,
     bbox_prefilter_sql,
     prepare,
 )
+from versatiles_rs_spark.sql_literals import sql_double
 
 
 def _unit_square() -> Polygon:
@@ -283,6 +283,50 @@ def test_classify_tiles():
             assert not corners_in.any()
 
 
+def _dense_touched(edges, w, s, e, n) -> np.ndarray:
+    """Reference tile-edge test: the Liang-Barsky clip of every edge
+    against every rect, as a (rects x edges) grid."""
+    x1, y1, x2, y2 = edges
+    dx, dy = (x2 - x1)[None, :], (y2 - y1)[None, :]
+    x1b, y1b = x1[None, :], y1[None, :]
+    t0, t1 = np.zeros((len(w), len(x1))), np.ones((len(w), len(x1)))
+    reject = np.zeros((len(w), len(x1)), dtype=bool)
+    for p, q in ((-dx, x1b - w[:, None]), (dx, e[:, None] - x1b),
+                 (-dy, y1b - s[:, None]), (dy, n[:, None] - y1b)):
+        p, q = np.broadcast_to(p, t0.shape), np.broadcast_to(q, t0.shape)
+        par = p == 0
+        reject |= par & (q < 0)
+        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+            t = np.where(par, 0.0, q / np.where(par, 1.0, p))
+        t0 = np.where(~par & (p < 0), np.maximum(t0, t), t0)
+        t1 = np.where(~par & (p > 0), np.minimum(t1, t), t1)
+    return (~reject & (t0 <= t1)).any(axis=1)
+
+
+@settings(max_examples=80, deadline=None)
+@given(data=st.data())
+def test_banded_tile_clip_matches_dense_kernel(data):
+    """Meeting only the edges of the bands a rect's [s, n] spans gives the
+    dense clip's answer, also for rects whose south or north lies on a band
+    boundary or a vertex y, zero-height rects, and horizontal edges."""
+    from versatiles_rs_spark.spatial.pip import _segments_intersect_rect
+
+    levels = data.draw(st.lists(st.floats(-30, 30), min_size=1, max_size=3))
+    y_of = st.one_of(st.sampled_from(levels), st.floats(-30, 30))
+    ring = data.draw(st.lists(st.tuples(st.floats(-40, 40), y_of), min_size=3, max_size=60))
+    idx = band_index(Polygon(1, "p", "ring", [ring]).edges())
+    nb = len(idx.starts) - 1
+    marks = [idx.ymin + b / idx.scale for b in range(nb + 1)] if idx.scale else [idx.ymin]
+    y_at = st.one_of(st.sampled_from(marks + [y for _, y in ring]), st.floats(-35, 35))
+    rects = data.draw(st.lists(
+        st.tuples(st.floats(-45, 45), st.floats(0, 20), y_at, y_at), min_size=1, max_size=30))
+    w, width, a, b = (np.array(c, dtype=np.float64) for c in zip(*rects))
+    s, n = np.minimum(a, b), np.maximum(a, b)
+    got = _segments_intersect_rect(idx, w, s, w + width, n)
+    want = _dense_touched((idx.x1, idx.y1, idx.x2, idx.y2), w, s, w + width, n)
+    assert np.array_equal(got, want)
+
+
 def test_cell_covers_and_tile_classes_are_pinned():
     """sha1 of the z5/z7 cell covers and a z8 tile-class grid of every
     sample polygon and the benchmark's rings; a prepared polygon classifies
@@ -391,11 +435,11 @@ def test_prefilter_literals_round_trip_exactly(spark):
     values = [0.0, -0.0, 5e-324, -5e-324, 1e300, 1.7976931348623157e308, 0.1, 1 / 3,
               -2.5e-10, np.inf, -np.inf]
     row = spark.range(1).select(
-        *[F.expr(_sql_double(v)).alias(f"v{i}") for i, v in enumerate(values)]).first()
+        *[F.expr(sql_double(v)).alias(f"v{i}") for i, v in enumerate(values)]).first()
     for i, v in enumerate(values):
         got = row[f"v{i}"]
         assert got == v and np.signbit(got) == np.signbit(v), (v, got)
-    assert np.isnan(spark.range(1).select(F.expr(_sql_double(np.nan)).alias("v")).first()["v"])
+    assert np.isnan(spark.range(1).select(F.expr(sql_double(np.nan)).alias("v")).first()["v"])
 
 
 def test_pip_join_rows_are_pinned(spark):

@@ -261,7 +261,7 @@ def test_pyramid_gaps_healthy_pyramid_has_no_orphans(spark, sf_dir):
     from versatiles_rs_spark.tile_math.coords import lonlat_to_tile_cols
 
     geo = _docs_geo(spark, sf_dir)
-    x8, y8 = lonlat_to_tile_cols(F.col("lon"), F.col("lat"), _PYR_ZMAX)
+    x8, y8 = lonlat_to_tile_cols("lon", "lat", _PYR_ZMAX)
     t8 = geo.select(x8.alias("x8"), y8.alias("y8")).distinct()
     present = (
         t8.select("x8", "y8", F.explode(F.sequence(F.lit(0), F.lit(_PYR_ZMAX))).alias("z"))

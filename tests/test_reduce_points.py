@@ -20,7 +20,7 @@ from versatiles_rs_spark.tile_math.hilbert import splitmix64_np, splitmix64_unit
 def test_splitmix_column_matches_numpy(spark):
     ids = np.arange(0, 5000, dtype=np.int64)
     df = spark.range(0, 5000).select(F.col("id"))
-    got = df.select(splitmix64_col(F.col("id")).alias("h"), splitmix64_unit_col(F.col("id")).alias("u")).toPandas()
+    got = df.select(splitmix64_col("id").alias("h"), splitmix64_unit_col("id").alias("u")).toPandas()
     want_h = splitmix64_np(ids.astype(np.uint64)).astype(np.int64)  # two's complement view
     np.testing.assert_array_equal(got["h"].values, want_h)
     np.testing.assert_allclose(got["u"].values, splitmix64_unit_np(ids.astype(np.uint64)), rtol=0, atol=0)

@@ -37,7 +37,7 @@ def test_stateful_tile_stats_accumulates_across_batches(spark, tmp_path, sf_dir)
     # final accumulated counts == batch groupBy
     from versatiles_rs_spark.tile_math.coords import lonlat_to_tile_cols
 
-    x, y = lonlat_to_tile_cols(F.col("lon"), F.col("lat"), 2)
+    x, y = lonlat_to_tile_cols("lon", "lat", 2)
     want = (
         ev.withColumn("x", x).withColumn("y", y)
         .groupBy("x", "y").agg(F.count("*").alias("n_events"))
@@ -88,7 +88,7 @@ def test_streaming_convert_incremental(spark, tmp_path):
         (r["z"], r["x"], r["y"]): bytes(r["tile"])
         for r in read_latest_tiles(spark, str(out)).collect()
     }
-    x, y = lonlat_to_tile_cols(F.col("lon"), F.col("lat"), zoom)
+    x, y = lonlat_to_tile_cols("lon", "lat", zoom)
     assigned = docs.withColumn("z", F.lit(zoom)).withColumn("x", x).withColumn("y", y)
     want = {
         (r["z"], r["x"], r["y"]): bytes(r["tile"])

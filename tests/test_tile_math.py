@@ -13,6 +13,8 @@ import math
 
 import numpy as np
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from versatiles_rs_spark.tile_math import (
     coord_to_geo_np,
@@ -165,7 +167,7 @@ def test_column_form_matches_numpy(spark):
     )
     df = spark.createDataFrame(pdf)
     for z in (3, 10, 14):
-        xc, yc = lonlat_to_tile_cols(F.col("lon"), F.col("lat"), z)
+        xc, yc = lonlat_to_tile_cols("lon", "lat", z)
         out = df.select(xc.alias("x"), yc.alias("y")).toPandas()
         xn, yn = lonlat_to_tile_np(pdf["lon"].values, pdf["lat"].values, z)
         np.testing.assert_array_equal(out["x"].values, xn)
@@ -220,3 +222,38 @@ def test_at_level_and_flip_and_ground_size(spark):
     assert row["fy"] == 2**10 - 1 - 335
     assert abs(row["gs"] - WORLD_SIZE / 1024) < 1e-6
     assert (row["sx"], row["sy"]) == (335, 550)
+
+
+_LON = st.one_of(st.sampled_from([-180.0, 180.0, 0.0, -0.0, -179.999999, 179.999999]),
+                 st.floats(-180.0, 180.0))
+_LAT = st.one_of(st.sampled_from([-90.0, 90.0, -85.0511, 85.0511, -85.051128779806589,
+                                  85.051128779806589, 0.0]),
+                 st.floats(-90.0, 90.0))
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(points=st.lists(st.tuples(_LON, _LAT), min_size=1, max_size=20), z=st.integers(0, 30),
+       ids=st.lists(st.integers(-(2**63), 2**63 - 1), min_size=1, max_size=20))
+def test_sql_column_forms_match_numpy(spark, points, z, ids):
+    """The one-expression Column forms of the geocode and the splitmix64
+    hash give exactly the numpy forms, at the antimeridian, the mercator
+    limit, the poles and every zoom."""
+    from versatiles_rs_spark.operators.reduce_points import splitmix64_col, splitmix64_unit_col
+
+    lon, lat = (np.array(c, dtype=np.float64) for c in zip(*points))
+    df = spark.createDataFrame([(float(a), float(b)) for a, b in points], "lon double, lat double")
+    xc, yc = lonlat_to_tile_cols("lon", "lat", z)
+    got = df.select(xc.alias("x"), yc.alias("y")).toPandas()
+    zc = lonlat_to_tile_cols("lon", "lat", "z")
+    by_name = df.selectExpr("*", f"{z} AS z").select(zc[0].alias("x"), zc[1].alias("y")).toPandas()
+    xn, yn = lonlat_to_tile_np(lon, lat, z)
+    np.testing.assert_array_equal(got["x"].values, xn)
+    np.testing.assert_array_equal(got["y"].values, yn)
+    np.testing.assert_array_equal(by_name["x"].values, xn)
+    np.testing.assert_array_equal(by_name["y"].values, yn)
+
+    hashed = spark.createDataFrame([(i,) for i in ids], "id bigint").select(
+        splitmix64_col("id").alias("h"), splitmix64_unit_col("id").alias("u")).toPandas()
+    u64 = np.array(ids, dtype=np.int64).astype(np.uint64)
+    np.testing.assert_array_equal(hashed["h"].values, splitmix64_np(u64).astype(np.int64))
+    np.testing.assert_array_equal(hashed["u"].values, splitmix64_unit_np(u64))

@@ -27,21 +27,26 @@ z/x/y bounds WITHOUT opening them (Iceberg-style metadata pruning — at
 100 TB the driver plans from kilobytes of manifests, never from the data).
 
 One commit path (``_resume``) serves tile and key batches, and one call
-costs a fixed number of Spark jobs whatever its batch count:
+runs one Spark job whatever its batch count (plus the shuffle map stages
+of its input, such as the render's):
 
-1. the input is persisted for the call, and its first action is one
-   aggregate per batch id (row count, tile/text byte sum, tile x/y
-   bounds; ``_batch_stats``), which fills the cache;
-2. one write job (``_write``) writes the rows of every uncommitted
-   batch that holds any, partitioned by batch id into
-   data/batch=<id>/ — a committed batch's directory is never touched,
-   an uncommitted batch's leftovers are replaced. The same job observes
-   its global row and byte totals, and they must equal the aggregate's
+1. the job (``_stage``) renders the input and writes it in the same
+   pass: each task groups its Arrow batches by batch id, drops the rows
+   of committed and unplanned batches, writes each remaining batch's
+   rows with pyarrow into <table>/_staging/<call id>/batch=<id>/, and
+   returns one row per file (path, row count, tile/text byte sum, tile
+   x/y bounds);
+2. every reported file's footer row count must equal its reported count
    before anything commits;
-3. each batch commits in static plan order (``_commit``): per-file
-   stats from the parquet footers (pyarrow metadata, no row reads), the
-   lineage record, the snapshot, the atomic manifest swap — from one
-   read of the manifest per call.
+3. each batch commits in static plan order (``_commit``): its
+   uncommitted leftovers in data/batch=<id>/ go, the files reported for
+   it move there (a committed batch's directory is never touched), then
+   the lineage record with per-file footer stats, the snapshot and the
+   atomic manifest swap — from one read of the manifest per call.
+
+The staging directory goes at the end of the call, failed or not, and at
+the start of the next, so a file that was never reported (the output of a
+failed task attempt) never reaches data/.
 
 Tile batches are the static plan's uncommitted blocks that hold tiles,
 so batch ids, commit order and ``as_of`` semantics do not depend on the
@@ -64,11 +69,12 @@ import os
 import re
 import shutil
 import time
+import uuid
 from dataclasses import dataclass
 
-from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
 
 
 @dataclass(frozen=True)
@@ -128,42 +134,41 @@ def resume_plan(table: str, batches: list[TileBatch]) -> list[TileBatch]:
     return [b for b in batches if b.batch_id not in done]
 
 
-def _file_stats(data_dir: str) -> list[dict]:
-    """Per-data-file statistics straight from the parquet footers: row
-    count, on-disk size, and z/x/y min/max — the manifest entries pruning
-    plans from. No row is read; a missing directory has no files."""
+def _parquet_stats(path: str) -> dict:
+    """One data file's statistics straight from its parquet footer: row
+    count, on-disk size, and z/x/y min/max — the manifest entry pruning
+    plans from. No row is read."""
     import pyarrow.parquet as pq
 
-    out = []
+    md = pq.ParquetFile(path).metadata
+    bounds: dict[str, list] = {}
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        for ci in range(g.num_columns):
+            col = g.column(ci)
+            cname = col.path_in_schema
+            if cname in ("z", "x", "y") and col.statistics is not None:
+                lo, hi = col.statistics.min, col.statistics.max
+                if cname in bounds:
+                    bounds[cname] = [min(bounds[cname][0], lo), max(bounds[cname][1], hi)]
+                else:
+                    bounds[cname] = [lo, hi]
+    return {
+        "path": path,
+        "rows": md.num_rows,
+        "file_bytes": os.path.getsize(path),
+        **{f"{c}_min": bounds[c][0] for c in bounds},
+        **{f"{c}_max": bounds[c][1] for c in bounds},
+    }
+
+
+def _file_stats(data_dir: str) -> list[dict]:
+    """``_parquet_stats`` of every parquet file in ``data_dir``, by name;
+    a missing directory has no files."""
     if not os.path.isdir(data_dir):
-        return out
-    for name in sorted(os.listdir(data_dir)):
-        if not name.endswith(".parquet"):
-            continue
-        path = os.path.join(data_dir, name)
-        md = pq.ParquetFile(path).metadata
-        bounds: dict[str, list] = {}
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                col = g.column(ci)
-                cname = col.path_in_schema
-                if cname in ("z", "x", "y") and col.statistics is not None:
-                    lo, hi = col.statistics.min, col.statistics.max
-                    if cname in bounds:
-                        bounds[cname] = [min(bounds[cname][0], lo), max(bounds[cname][1], hi)]
-                    else:
-                        bounds[cname] = [lo, hi]
-        out.append(
-            {
-                "path": path,
-                "rows": md.num_rows,
-                "file_bytes": os.path.getsize(path),
-                **{f"{c}_min": bounds[c][0] for c in bounds},
-                **{f"{c}_max": bounds[c][1] for c in bounds},
-            }
-        )
-    return out
+        return []
+    names = sorted(n for n in os.listdir(data_dir) if n.endswith(".parquet"))
+    return [_parquet_stats(os.path.join(data_dir, n)) for n in names]
 
 
 def _read_snapshot(table: str, sid: int) -> dict:
@@ -208,9 +213,8 @@ def write_batch(table: str, batch: TileBatch, tiles: DataFrame) -> dict | None:
     already or its block holds no tiles (an empty block commits nothing).
 
     A one-batch call of the commit path, so ``tiles`` is rendered once
-    and persisted for the call; a caller writing batches itself should
-    cache ``tiles`` first (``convert_resumable`` writes all of them at
-    once)."""
+    per call; a caller writing batches itself should cache ``tiles``
+    first (``convert_resumable`` writes all of them at once)."""
     recs = _resume(tiles, table, [batch], _tile_key(batch.block_bits), "tile", ("x", "y"))
     return recs[0] if recs else None
 
@@ -275,27 +279,108 @@ def _commit_snapshot(table: str, manifest: dict, snapshot: dict) -> None:
     _commit_manifest(table, manifest)
 
 
-# the partition column of the write: each row's batch id
+# each row's batch id, a column of the frame the write job reads
 _BATCH = "batch"
+# a commit call's staged files: <table>/_staging/<call id>/batch=<id>/
+_STAGING = "_staging"
+# Arrow bytes of rows a write task buffers before it writes one more part
+# file, so a task's memory stays bounded whatever its partition's size
+_FLUSH_BYTES = 64 << 20
 
 
-def _write(rows: DataFrame, data_dir: str, *totals: Column) -> dict:
-    """The one write job of a commit call: ``rows`` partitioned by batch
-    id into ``data_dir``/batch=<id>/. Dynamic partition overwrite replaces
-    each written batch directory whole and touches no other; a killed job
-    leaves its files in a staging directory of its own. Returns
-    ``totals``, observed by the same job."""
-    obs = Observation()
-    rows.observe(obs, *totals).write.partitionBy(_BATCH).mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(data_dir)
-    return obs.get
+def _stage(
+    keyed: DataFrame, staging: str, todo: frozenset, bytes_col: str, bounds: tuple[str, ...]
+) -> list[dict]:
+    """The one Spark job of a commit call: ``keyed``, with its ``_BATCH``
+    column, computed and written in the same pass. Each task groups its
+    Arrow batches by batch id, drops the rows of batches not in ``todo``
+    and writes each batch's rows with pyarrow to
+    ``staging``/batch=<id>/part-<partition>-<attempt>-<n>.parquet. When a
+    task buffers more than ``_FLUSH_BYTES``, its largest batch goes to one
+    more part file; a task has one writer open at a time.
+
+    Returns one row per written file: batch id, path, row count, the byte
+    sum of ``bytes_col`` with Spark's ``length`` semantics (characters of
+    a string, bytes of a binary, 0 when every value is null) and the
+    min/max of each column in ``bounds``."""
+    kind = keyed.schema[bytes_col].dataType
+    if not isinstance(kind, (StringType, BinaryType)):
+        raise TypeError(f"{bytes_col!r} must be a string or binary column, not {kind.simpleString()}")
+    chars = isinstance(kind, StringType)
+    budget = _FLUSH_BYTES
+    stats = ["row_count", "bytes", *[f"{c}_{f}" for c in bounds for f in ("min", "max")]]
+    schema = StructType(
+        [StructField(_BATCH, StringType()), StructField("path", StringType())]
+        + [StructField(s, LongType()) for s in stats]
+    )
+
+    def write(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        out = pa.schema([(_BATCH, pa.string()), ("path", pa.string())] + [(s, pa.int64()) for s in stats])
+        ctx = TaskContext.get()
+        stem = f"part-{ctx.partitionId():05d}-{ctx.attemptNumber()}"
+        held: dict[str, list] = {}  # batch id -> buffered row tables
+        size: dict[str, int] = {}
+        n_files = 0
+
+        def flush(bid: str):
+            nonlocal n_files
+            t = pa.concat_tables(held.pop(bid))
+            del size[bid]
+            path = os.path.join(staging, f"{_BATCH}={bid}", f"{stem}-{n_files:04d}.parquet")
+            n_files += 1
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            pq.write_table(t, path)
+            length = (pc.utf8_length if chars else pc.binary_length)(t.column(bytes_col))
+            row = {_BATCH: bid, "path": path, "row_count": t.num_rows,
+                   "bytes": pc.sum(length, min_count=0).as_py()}
+            for c in bounds:
+                lo_hi = pc.min_max(t.column(c))
+                row[f"{c}_min"], row[f"{c}_max"] = lo_hi["min"].as_py(), lo_hi["max"].as_py()
+            return pa.RecordBatch.from_pylist([row], schema=out)
+
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            ids = rb.column(_BATCH).dictionary_encode()
+            codes = ids.indices.to_numpy()
+            order = np.argsort(codes, kind="stable")
+            ends = np.cumsum(np.bincount(codes, minlength=len(ids.dictionary))).tolist()
+            rows = pa.Table.from_batches([rb]).drop_columns([_BATCH])
+            start = 0
+            for bid, end in zip(ids.dictionary.to_pylist(), ends):
+                if bid in todo:  # a copy, so the rows held own their buffers
+                    part = rows.take(order[start:end])
+                    held.setdefault(bid, []).append(part)
+                    size[bid] = size.get(bid, 0) + part.nbytes
+                start = end
+            while sum(size.values()) > budget:
+                yield flush(max(size, key=size.get))
+        for bid in sorted(held):
+            yield flush(bid)
+
+    return [r.asDict() for r in keyed.mapInArrow(write, schema).collect()]
 
 
-def _commit(table: str, manifest: dict, batch: TileBatch | KeyBatch, stats: dict) -> dict:
-    """Commit one written batch: per-file stats from its parquet footers,
-    the lineage record, the snapshot, then the atomic manifest swap."""
-    files = _file_stats(os.path.join(table, "data", f"{_BATCH}={batch.batch_id}"))
+def _fold(stat: str, a, b):
+    """Two files' values of one batch statistic, combined."""
+    if a is None or b is None:
+        return b if a is None else a
+    if stat.endswith("_min"):
+        return min(a, b)
+    return max(a, b) if stat.endswith("_max") else a + b
+
+
+def _commit(
+    table: str, manifest: dict, batch: TileBatch | KeyBatch, stats: dict, files: list[dict]
+) -> dict:
+    """Commit one written batch: the lineage record with its ``files``'
+    footer stats, the snapshot, then the atomic manifest swap."""
     lineage = {
         "batch_id": batch.batch_id,
         **batch.lineage,
@@ -334,38 +419,6 @@ def _commit(table: str, manifest: dict, batch: TileBatch | KeyBatch, stats: dict
     return lineage
 
 
-def _batch_stats(keyed: DataFrame, bytes_col: str, bounds: tuple[str, ...]) -> dict[str, dict]:
-    """Per batch id: row count, ``bytes_col`` byte sum (0 when all null)
-    and the min/max of each column in ``bounds`` — in one Spark job with
-    no Exchange. Each task reduces its Arrow batches by batch id and the
-    Spark driver reduces the partial rows again with the same aggregate
-    (a groupBy would cost a shuffle map stage, which adaptive execution
-    runs as a job of its own)."""
-    ops = {"row_count": "sum", "bytes": "sum", **{f"{c}_{f}": f for c in bounds for f in ("min", "max")}}
-
-    def reduce(t):
-        import pyarrow.compute as pc
-
-        every = pc.ScalarAggregateOptions(min_count=0)
-        g = t.group_by(_BATCH).aggregate([(c, op, every) for c, op in ops.items()])
-        return g.select([_BATCH, *[f"{c}_{op}" for c, op in ops.items()]]).rename_columns([_BATCH, *ops])
-
-    def partials(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            if b.num_rows:
-                yield from reduce(pa.Table.from_batches([b])).to_batches()
-
-    rows = keyed.select(
-        _BATCH,
-        F.lit(1).cast("long").alias("row_count"),
-        F.length(bytes_col).cast("long").alias("bytes"),
-        *[F.col(c).cast("long").alias(f"{c}_{f}") for c in bounds for f in ("min", "max")],
-    )
-    return {r.pop(_BATCH): r for r in reduce(rows.mapInArrow(partials, rows.schema).toArrow()).to_pylist()}
-
-
 def _resume(
     df: DataFrame,
     table: str,
@@ -376,20 +429,19 @@ def _resume(
     commit_empty: bool = False,
 ) -> list[dict]:
     """The one commit path of tile and key batches: commit each of
-    ``batches`` not yet committed to ``table``, in plan order, in a fixed
-    number of Spark jobs whatever their count. ``key`` is each row's
-    batch id.
+    ``batches`` not yet committed to ``table``, in plan order, in one
+    Spark job whatever their count. ``key`` is each row's batch id.
 
-    ``df`` is persisted for the call (a DataFrame that is already cached
-    is used as is and left cached), and its first action, which fills the
-    cache, is one aggregate per batch id (``_batch_stats``). One write job
-    then writes the rows of the uncommitted batches that hold any; its
-    own row and byte totals must equal the aggregate's, or nothing
-    commits. Last, each batch commits in plan order with the aggregate's
-    stats, from one read of the manifest; a batch without rows commits
-    (with no file) only when ``commit_empty``. The persist is released
-    even when a step fails; a kill at any step leaves the last committed
-    snapshot intact."""
+    The job (``_stage``) writes the rows of the uncommitted batches to a
+    staging directory of this call and reports each file's stats. Every
+    reported file's footer must hold the reported row count, or nothing
+    commits. Then each batch in plan order replaces its uncommitted
+    leftovers in data/batch=<id>/ with its reported files and commits
+    with their summed stats, from one read of the manifest; a batch
+    without rows commits (with no file) only when ``commit_empty``. The
+    staging directory goes at the end, failed or not, and at the start of
+    the next call (single writer); a kill at any step leaves the last
+    committed snapshot intact."""
     if _BATCH in df.columns:
         raise ValueError(f"a committed frame may not have a {_BATCH!r} column")
     os.makedirs(table, exist_ok=True)
@@ -397,33 +449,44 @@ def _resume(
     todo = [b for b in batches if b.batch_id not in manifest["batches"]]
     if not todo:
         return []
-    owned = df.storageLevel == StorageLevel.NONE
-    if owned:
-        df.persist()
+    staging = os.path.join(table, _STAGING)
+    shutil.rmtree(staging, ignore_errors=True)  # what a killed call staged
     try:
-        keyed = df.withColumn(_BATCH, key)
-        agg = _batch_stats(keyed, bytes_col, bounds)
-        ids = [b.batch_id for b in todo if b.batch_id in agg]
-        for b in todo:  # an uncommitted batch's leftovers go, rewritten or empty
-            shutil.rmtree(os.path.join(table, "data", f"{_BATCH}={b.batch_id}"), ignore_errors=True)
-        if ids:
-            totals = [
-                F.count(F.lit(1)).alias("row_count"),
-                F.coalesce(F.sum(F.length(bytes_col)), F.lit(0)).alias("bytes"),
-            ]
-            seen = _write(keyed.filter(F.col(_BATCH).isin(ids)), os.path.join(table, "data"), *totals)
-            want = {t: sum(agg[i][t] for i in ids) for t in seen}
-            if seen != want:
-                raise RuntimeError(f"write saw {seen}, aggregate counted {want}: nothing committed")
+        staged = _stage(
+            df.withColumn(_BATCH, key),
+            os.path.join(staging, uuid.uuid4().hex),
+            frozenset(b.batch_id for b in todo),
+            bytes_col,
+            bounds,
+        )
+        files: dict[str, list[dict]] = {}
+        stats: dict[str, dict] = {}
+        for row in staged:
+            bid, footer = row.pop(_BATCH), _parquet_stats(row.pop("path"))
+            if footer["rows"] != row["row_count"]:
+                raise RuntimeError(
+                    f"{footer['path']} holds {footer['rows']} rows, its task reported "
+                    f"{row['row_count']}: nothing committed"
+                )
+            files.setdefault(bid, []).append(footer)
+            old = stats.get(bid, {})
+            stats[bid] = {s: _fold(s, old.get(s), v) for s, v in row.items()}
+        recs, empty = [], {"row_count": 0, "bytes": 0}
+        for b in todo:
+            data = os.path.join(table, "data", f"{_BATCH}={b.batch_id}")
+            shutil.rmtree(data, ignore_errors=True)  # an uncommitted batch's leftovers
+            moved = sorted(files.get(b.batch_id, []), key=lambda f: os.path.basename(f["path"]))
+            if moved:
+                os.makedirs(data)
+            for f in moved:
+                path = os.path.join(data, os.path.basename(f["path"]))
+                os.replace(f["path"], path)
+                f["path"] = path
+            if moved or commit_empty:
+                recs.append(_commit(table, manifest, b, stats.get(b.batch_id, empty), moved))
+        return recs
     finally:
-        if owned:
-            df.unpersist(blocking=True)
-    empty = {"row_count": 0, "bytes": 0}
-    return [
-        _commit(table, manifest, b, agg.get(b.batch_id, empty))
-        for b in todo
-        if commit_empty or b.batch_id in agg
-    ]
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def convert_resumable(
@@ -437,7 +500,7 @@ def convert_resumable(
     skips every committed batch. The batches are the static plan's blocks
     that hold tiles, committed in plan order; empty blocks commit no
     snapshot. The pyramid is rendered once per call, and the call runs
-    one aggregate and one write job whatever its batch count."""
+    one write job whatever its batch count."""
     batches = plan_batches(min_zoom, max_zoom, block_bits)
     return _resume(tiles, table, batches, _tile_key(block_bits), "tile", ("x", "y"))
 

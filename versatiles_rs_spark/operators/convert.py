@@ -68,10 +68,9 @@ def assign_tiles(
     lat_col: str = "lat",
 ) -> DataFrame:
     """One row per (point, zoom) with tile coords. Pure Column math."""
-    z = F.explode(F.sequence(F.lit(min_zoom), F.lit(max_zoom))).alias("z")
-    df = points.select("*", z)
-    x, y = lonlat_to_tile_cols(F.col(lon_col), F.col(lat_col), F.col("z"))
-    return df.withColumn("x", x).withColumn("y", y)
+    df = points.selectExpr("*", f"explode(sequence({int(min_zoom)}, {int(max_zoom)})) AS z")
+    x, y = lonlat_to_tile_cols(lon_col, lat_col, "z")
+    return df.withColumns({"x": x, "y": y})
 
 
 def _quantize_grid(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:

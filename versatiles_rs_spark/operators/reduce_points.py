@@ -29,31 +29,43 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from versatiles_rs_spark.sql_literals import sql_double, sql_name
+
 # splitmix64 constants as signed 64-bit literals (two's complement)
 _SM_GAMMA = 0x9E3779B97F4A7C15 - (1 << 64)  # negative signed literal
 _SM_MUL1 = 0xBF58476D1CE4E5B9 - (1 << 64)
 _SM_MUL2 = 0x94D049BB133111EB - (1 << 64)
 
 
-def splitmix64_col(col: Column) -> Column:
-    """splitmix64 as wrapping signed-int64 Column arithmetic (bit-exact with
-    the uint64 reference because two's-complement add/mul/xor/ushr are
-    bit-identical)."""
-    x = col.cast("bigint") + F.lit(_SM_GAMMA).cast("bigint")
-    x = x.bitwiseXOR(F.shiftrightunsigned(x, 30)) * F.lit(_SM_MUL1).cast("bigint")
-    x = x.bitwiseXOR(F.shiftrightunsigned(x, 27)) * F.lit(_SM_MUL2).cast("bigint")
-    return x.bitwiseXOR(F.shiftrightunsigned(x, 31))
+def splitmix64_sql(name: str) -> str:
+    """splitmix64 of the column ``name`` as wrapping signed-int64 SQL
+    arithmetic (bit-exact with the uint64 reference because
+    two's-complement add/mul/xor/ushr are bit-identical)."""
+    x = f"(CAST({sql_name(name)} AS BIGINT) + {_SM_GAMMA}L)"
+    x = f"(({x} ^ shiftrightunsigned({x}, 30)) * {_SM_MUL1}L)"
+    x = f"(({x} ^ shiftrightunsigned({x}, 27)) * {_SM_MUL2}L)"
+    return f"({x} ^ shiftrightunsigned({x}, 31))"
 
 
-def splitmix64_unit_col(col: Column) -> Column:
+def splitmix64_unit_sql(name: str) -> str:
     """Uniform [0,1): high 53 bits / 2^53 (reduce_points.rs:130-136)."""
-    return F.shiftrightunsigned(splitmix64_col(col), 11).cast("double") / F.lit(float(1 << 53))
+    return f"(CAST(shiftrightunsigned({splitmix64_sql(name)}, 11) AS DOUBLE) / {sql_double(1 << 53)})"
 
 
-def portable_unit_col(col: Column) -> Column:
-    """Overflow-free stable hash -> [0,1); same expression is valid ANSI SQL
-    (DuckDB oracle: ``(id * 2654435761) % 4294967296 / 4294967296.0``)."""
-    return ((col.cast("bigint") * F.lit(2654435761)) % F.lit(4294967296)).cast("double") / F.lit(4294967296.0)
+def portable_unit_sql(name: str) -> str:
+    """Overflow-free stable hash -> [0,1); the same arithmetic as
+    ``PORTABLE_UNIT_SQL``, which DuckDB runs for the correctness oracle."""
+    return f"(CAST((CAST({sql_name(name)} AS BIGINT) * 2654435761) % 4294967296 AS DOUBLE) / 4294967296.0D)"
+
+
+def splitmix64_col(name: str) -> Column:
+    """``splitmix64_sql`` as a Column."""
+    return F.expr(splitmix64_sql(name))
+
+
+def splitmix64_unit_col(name: str) -> Column:
+    """``splitmix64_unit_sql`` as a Column."""
+    return F.expr(splitmix64_unit_sql(name))
 
 
 PORTABLE_UNIT_SQL = "((({id}) * 2654435761) % 4294967296) / 4294967296.0"
@@ -75,11 +87,11 @@ def drop_rate_keep(
     """
     if keep_ratio >= 1.0:
         return df
-    unit = splitmix64_unit_col(F.col(id_col)) if hash_flavor == "splitmix" else portable_unit_col(F.col(id_col))
-    threshold = F.pow(F.lit(keep_ratio), (F.lit(max_zoom) - F.col(z_col)).cast("double"))
     if keep_ratio <= 0.0:
         return df.filter(F.col(z_col) >= max_zoom + 1)  # drop all
-    return df.filter(unit < threshold)
+    unit = splitmix64_unit_sql(id_col) if hash_flavor == "splitmix" else portable_unit_sql(id_col)
+    threshold = f"power({sql_double(keep_ratio)}, CAST({max_zoom} - {sql_name(z_col)} AS DOUBLE))"
+    return df.filter(F.expr(f"{unit} < {threshold}"))
 
 
 def min_distance_cell_winner(

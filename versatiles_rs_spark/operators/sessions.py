@@ -178,7 +178,7 @@ def od_flows(
     cardinality is bounded by 4^(2*zoom), not the event log. Cell
     assignment is pure Column math inside codegen; no Python anywhere.
     """
-    x, y = lonlat_to_tile_cols(F.col(lon_col), F.col(lat_col), zoom)
+    x, y = lonlat_to_tile_cols(lon_col, lat_col, zoom)
     us = F.unix_micros(F.col(ts_col).cast("timestamp"))
     cells = events.select(
         F.col(user_col).alias("u"),

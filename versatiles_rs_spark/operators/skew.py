@@ -68,7 +68,7 @@ def cap_features_per_tile(
     by the stable splitmix64 unit hash (ties impossible for distinct ids),
     so the kept set is independent of partitioning/execution order."""
     w = Window.partitionBy("z", "x", "y").orderBy(
-        splitmix64_unit_col(F.col(id_col)).asc(), F.col(id_col).asc()
+        splitmix64_unit_col(id_col).asc(), F.col(id_col).asc()
     )
     return (
         assigned.withColumn("_rk", F.row_number().over(w))

@@ -150,10 +150,10 @@ FROM merc GROUP BY 1, 2
 def q_allowlist_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = 6
     docs = _docs_geo(spark, sf_dir)
-    dx, dy = lonlat_to_tile_cols(F.col("lon"), F.col("lat"), z)
+    dx, dy = lonlat_to_tile_cols("lon", "lat", z)
     doc_tiles = docs.select("doc_id", dx.alias("x"), dy.alias("y"))
     events = _events_geo(spark, sf_dir)
-    ex, ey = lonlat_to_tile_cols(F.col("lon"), F.col("lat"), z)
+    ex, ey = lonlat_to_tile_cols("lon", "lat", z)
     allow = events.select(ex.alias("x"), ey.alias("y")).distinct()
     return doc_tiles.join(allow, ["x", "y"], "left_semi").select("doc_id", "x", "y")
 
@@ -355,7 +355,7 @@ FROM dpts WHERE lang = 'en' GROUP BY 1, 2, 3
 
 def q_windowed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events_geo(spark, sf_dir)
-    x, y = lonlat_to_tile_cols(F.col("lon"), F.col("lat"), 3)
+    x, y = lonlat_to_tile_cols("lon", "lat", 3)
     return (
         ev.withColumn("x", x).withColumn("y", y)
         .groupBy(
@@ -385,10 +385,10 @@ FROM pts GROUP BY 1, 2, 3
 def q_coord_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = 5
     docs = _docs_geo(spark, sf_dir)
-    dx, dy = lonlat_to_tile_cols(F.col("lon"), F.col("lat"), z)
+    dx, dy = lonlat_to_tile_cols("lon", "lat", z)
     a = docs.select(dx.alias("x"), dy.alias("y")).distinct()
     ev = _events_geo(spark, sf_dir)
-    ex, ey = lonlat_to_tile_cols(F.col("lon"), F.col("lat"), z)
+    ex, ey = lonlat_to_tile_cols("lon", "lat", z)
     b = ev.select(ex.alias("x"), ey.alias("y")).distinct()
     union = a.union(b).distinct().select(F.lit("union").alias("op"), "x", "y")
     inter = a.intersect(b).select(F.lit("intersect").alias("op"), "x", "y")
@@ -424,7 +424,7 @@ def q_sort_index_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     z = 6
     docs = _docs_geo(spark, sf_dir)
-    x, y = lonlat_to_tile_cols(F.col("lon"), F.col("lat"), z)
+    x, y = lonlat_to_tile_cols("lon", "lat", z)
     t = docs.select("doc_id", F.lit(z).alias("z"), x.alias("x"), y.alias("y"))
     return t.select(
         "doc_id", "x", "y", sort_index_col(F.col("z"), F.col("x"), F.col("y")).alias("sort_key")
@@ -743,7 +743,7 @@ def q_pyramid_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     from versatiles_rs_spark.tile_math.coords import lonlat_to_tile_cols
 
     geo = _docs_geo(spark, sf_dir)
-    x8, y8 = lonlat_to_tile_cols(F.col("lon"), F.col("lat"), _PYR_ZMAX)
+    x8, y8 = lonlat_to_tile_cols("lon", "lat", _PYR_ZMAX)
     t8 = geo.select(x8.alias("x8"), y8.alias("y8")).distinct()
     zs = F.explode(F.sequence(F.lit(0), F.lit(_PYR_ZMAX))).alias("z")
     present = (

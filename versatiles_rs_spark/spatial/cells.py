@@ -50,7 +50,7 @@ def cell_id_col(x: Column, y: Column, zoom: int) -> Column:
 
 
 def point_cells(points: DataFrame, zoom: int, lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-    x, y = lonlat_to_tile_cols(F.col(lon_col), F.col(lat_col), zoom)
+    x, y = lonlat_to_tile_cols(lon_col, lat_col, zoom)
     return points.withColumn("cell_id", cell_id_col(x, y, zoom))
 
 
@@ -59,14 +59,25 @@ def polygon_cell_cover(poly: Polygon, zoom: int) -> tuple[np.ndarray, np.ndarray
 
     Returns (cell_ids, classes) with class FULLY_INSIDE or PARTIAL.
     Quadtree descent: start at z0 and only subdivide PARTIAL cells — the
-    TileCover/TileQuadtree auto-upgrade pattern (tile_cover/mod.rs:48)."""
+    TileCover/TileQuadtree auto-upgrade pattern (tile_cover/mod.rs:48).
+    Each level's cells are classified in one ``classify_tiles`` call; the
+    descent then walks them depth first."""
     shape = prepare(poly)
+    classes: dict[tuple[int, int, int], int] = {}
+    level = np.zeros((1, 2), dtype=np.int64)  # (x, y) of one level's cells
+    for zc in range(zoom + 1):
+        cls = classify_tiles(zc, level[:, 0], level[:, 1], shape)
+        classes.update(zip(((zc, x, y) for x, y in level.tolist()), cls.tolist()))
+        split = level[cls == PARTIAL] * 2
+        level = np.concatenate([split + (dx, dy) for dx in (0, 1) for dy in (0, 1)])
+        if not len(level):
+            break
     frontier = [(0, 0, 0)]  # (z, x, y) partial cells to refine
     inside: list[tuple[int, int]] = []
     partial: list[tuple[int, int]] = []
     while frontier:
         zc, xc, yc = frontier.pop()
-        cls = classify_tiles(zc, np.array([xc]), np.array([yc]), shape)[0]
+        cls = classes[(zc, xc, yc)]
         if cls == FULLY_OUTSIDE:
             continue
         if cls == FULLY_INSIDE:

@@ -37,7 +37,6 @@ equi-join (spatial/cells.py) — same two-stage shape as the reference.
 from __future__ import annotations
 
 import itertools
-import math
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -49,6 +48,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from versatiles_rs_spark.sql_literals import sql_double, sql_name
 
 FULLY_OUTSIDE = 0
 PARTIAL = 1
@@ -131,6 +132,8 @@ def band_index(edges) -> BandIndex:
     ymax = float(hi.max()) if len(hi) else 0.0
     nb = min(max(len(x1) // _EDGES_PER_BAND, 1), _MAX_BANDS)
     scale = nb / (ymax - ymin) if ymax > ymin else 0.0
+    if not np.isfinite(scale):  # a y-extent of a few subnormals: one band
+        scale = 0.0
     b_lo = _band(lo, ymin, scale, nb)
     span = _band(hi, ymin, scale, nb) - b_lo + 1
     edge = np.repeat(np.arange(len(x1), dtype=np.int32), span)
@@ -157,9 +160,9 @@ def pip_contains_np(px: np.ndarray, py: np.ndarray, edges) -> np.ndarray:
     Each candidate point is expanded (``np.repeat``) to the edges of its
     band, the same crossing expression is evaluated on the flat pairs and
     the crossings are counted per point with ``np.bincount``: the mask is
-    bit-identical to testing every edge. Points go through in chunks of at
-    most ``_PAIR_BUDGET`` pairs (at least one point), so a polygon whose
-    bands all hold many long edges never allocates N x E intermediates.
+    bit-identical to testing every edge. Points go through in chunks of
+    ``_band_pairs``, so a polygon whose bands all hold many long edges
+    never allocates N x E intermediates.
     """
     idx = edges if isinstance(edges, BandIndex) else band_index(edges)
     px = np.asarray(px, dtype=np.float64)
@@ -168,58 +171,75 @@ def pip_contains_np(px: np.ndarray, py: np.ndarray, edges) -> np.ndarray:
     pts = np.flatnonzero((py >= idx.ymin) & (py < idx.ymax))
     cx, cy = px[pts], py[pts]
     band = _band(cy, idx.ymin, idx.scale, len(idx.starts) - 1)
-    first = idx.starts[band]
-    count = idx.starts[band + 1] - first
-    done = np.cumsum(count)
-    i = 0
     with np.errstate(divide="ignore", invalid="ignore"):
-        while i < len(pts):
-            base = done[i - 1] if i else 0
-            j = max(int(np.searchsorted(done, base + _PAIR_BUDGET, side="right")), i + 1)
-            c = count[i:j]
-            pair_pt = np.repeat(np.arange(j - i), c)
-            slot = np.repeat(first[i:j] - (done[i:j] - c - base), c) + np.arange(done[j - 1] - base)
-            e = idx.ids[slot]
+        for i, j, pair_pt, e in _band_pairs(idx, idx.starts[band], idx.starts[band + 1]):
             x1, y1, x2, y2 = idx.x1[e], idx.y1[e], idx.x2[e], idx.y2[e]
             bpx, bpy = cx[i:j][pair_pt], cy[i:j][pair_pt]
             straddles = (y1 > bpy) != (y2 > bpy)
             x_at_y = (x2 - x1) * (bpy - y1) / (y2 - y1) + x1
             hits = np.bincount(pair_pt[straddles & (bpx < x_at_y)], minlength=j - i)
             inside[pts[i:j]] = (hits % 2).astype(bool)
-            i = j
     return inside
 
 
+def _band_pairs(idx: BandIndex, first: np.ndarray, end: np.ndarray):
+    """Flat (item, edge) pairs in chunks: item k meets the edges
+    ``idx.ids[first[k]:end[k]]``. Each chunk holds at most
+    ``_PAIR_BUDGET`` pairs (at least one item) and is yielded as
+    ``(i, j, pair_item, edge)``: items ``i:j``, and for every pair its
+    item (counted from ``i``) and its edge."""
+    count = end - first
+    done = np.cumsum(count)
+    i = 0
+    while i < len(count):
+        base = done[i - 1] if i else 0
+        j = max(int(np.searchsorted(done, base + _PAIR_BUDGET, side="right")), i + 1)
+        c = count[i:j]
+        pair = np.repeat(np.arange(j - i), c)
+        slot = np.repeat(first[i:j] - (done[i:j] - c - base), c) + np.arange(done[j - 1] - base)
+        yield i, j, pair, idx.ids[slot]
+        i = j
+
+
 def _segments_intersect_rect(
-    edges, w: np.ndarray, s: np.ndarray, e: np.ndarray, n: np.ndarray
+    idx: BandIndex, w: np.ndarray, s: np.ndarray, e: np.ndarray, n: np.ndarray
 ) -> np.ndarray:
-    """(T tiles) x (E edges) Liang-Barsky clip acceptance -> per-tile bool:
-    does ANY polygon edge touch the tile rect (including edges fully inside
-    it)? Mirrors the reference's use of Liang-Barsky for line clipping
-    (feature_import/tile_render.rs:210)."""
-    x1, y1, x2, y2 = edges
-    dx = (x2 - x1)[None, :]
-    dy = (y2 - y1)[None, :]
-    x1b = x1[None, :]
-    y1b = y1[None, :]
-    t0 = np.zeros((len(w), len(x1)))
-    t1 = np.ones((len(w), len(x1)))
-    reject = np.zeros((len(w), len(x1)), dtype=bool)
-    for p, q in (
-        (-dx, x1b - w[:, None]),
-        (dx, e[:, None] - x1b),
-        (-dy, y1b - s[:, None]),
-        (dy, n[:, None] - y1b),
-    ):
-        p = np.broadcast_to(p, t0.shape)
-        q = np.broadcast_to(q, t0.shape)
-        par = p == 0
-        reject |= par & (q < 0)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            t = np.where(par, 0.0, q / np.where(par, 1.0, p))
-        t0 = np.where(~par & (p < 0), np.maximum(t0, t), t0)
-        t1 = np.where(~par & (p > 0), np.minimum(t1, t), t1)
-    return (~reject & (t0 <= t1)).any(axis=1)
+    """Liang-Barsky clip acceptance -> per-tile bool: does ANY polygon edge
+    touch the tile rect (including edges fully inside it)? Mirrors the
+    reference's use of Liang-Barsky for line clipping
+    (feature_import/tile_render.rs:210).
+
+    Banded: an edge can touch a tile only when its y-span meets the tile's
+    ``[s, n]``, and every such edge is listed for a band between those of
+    ``s`` and ``n``, so each tile meets only the edges of those bands, plus
+    one band on each side: the clip accepts an edge that misses ``[s, n]``
+    by the rounding of its divisions (about an ulp of the edge's height,
+    far less than a band), and those edges are met too. The clip runs on
+    flat (tile, edge) pairs from ``_band_pairs``; each pair's arithmetic is
+    the dense clip's, so the result is the same as testing every edge."""
+    nb = len(idx.starts) - 1
+    lo = np.maximum(_band(np.clip(s, idx.ymin, idx.ymax), idx.ymin, idx.scale, nb) - 1, 0)
+    hi = np.minimum(_band(np.clip(n, idx.ymin, idx.ymax), idx.ymin, idx.scale, nb) + 1, nb - 1)
+    touched = np.zeros(len(w), dtype=bool)
+    for i, j, pair, edge in _band_pairs(idx, idx.starts[lo], idx.starts[hi + 1]):
+        x1, y1 = idx.x1[edge], idx.y1[edge]
+        dx, dy = idx.x2[edge] - x1, idx.y2[edge] - y1
+        t0, t1 = np.zeros(len(edge)), np.ones(len(edge))
+        reject = np.zeros(len(edge), dtype=bool)
+        for p, q in (
+            (-dx, x1 - w[i:j][pair]),
+            (dx, e[i:j][pair] - x1),
+            (-dy, y1 - s[i:j][pair]),
+            (dy, n[i:j][pair] - y1),
+        ):
+            par = p == 0
+            reject |= par & (q < 0)
+            with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+                t = np.where(par, 0.0, q / np.where(par, 1.0, p))
+            t0 = np.where(~par & (p < 0), np.maximum(t0, t), t0)
+            t1 = np.where(~par & (p > 0), np.minimum(t1, t), t1)
+        touched[i:j] = np.bincount(pair[~reject & (t0 <= t1)], minlength=j - i) > 0
+    return touched
 
 
 @dataclass(frozen=True, eq=False)
@@ -260,7 +280,7 @@ def classify_tiles(
     todo = ~disjoint
     if todo.any():
         cw, cs, ce, cn = w[todo], s[todo], e[todo], n[todo]
-        touched = _segments_intersect_rect((idx.x1, idx.y1, idx.x2, idx.y2), cw, cs, ce, cn)
+        touched = _segments_intersect_rect(idx, cw, cs, ce, cn)
         # untouched tiles are uniform: sample the center point
         center_in = pip_contains_np((cw + ce) / 2.0, (cs + cn) / 2.0, idx)
         sub = np.full(todo.sum(), PARTIAL, dtype=np.int8)
@@ -270,25 +290,14 @@ def classify_tiles(
     return out
 
 
-def _sql_name(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _sql_double(v: float) -> str:
-    """A SQL literal of exactly ``v``: ``repr`` round-trips every finite
-    double (``-0.0`` and subnormals included) as a ``D`` literal."""
-    v = float(v)
-    return f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
-
-
 def bbox_prefilter_sql(lon_col: str, lat_col: str, bboxes) -> str:
     """One SQL condition: the point lies in any of ``bboxes`` (closed boxes
     ``(x0, y0, x1, y1)``). Built as one expression string, so planning it
     costs one parse, not a py4j round trip per ``Column`` operator."""
-    lon, lat = _sql_name(lon_col), _sql_name(lat_col)
+    lon, lat = sql_name(lon_col), sql_name(lat_col)
     return " OR ".join(
-        f"({lon} >= {_sql_double(x0)} AND {lon} <= {_sql_double(x1)}"
-        f" AND {lat} >= {_sql_double(y0)} AND {lat} <= {_sql_double(y1)})"
+        f"({lon} >= {sql_double(x0)} AND {lon} <= {sql_double(x1)}"
+        f" AND {lat} >= {sql_double(y0)} AND {lat} <= {sql_double(y1)})"
         for x0, y0, x1, y1 in bboxes
     )
 

@@ -71,7 +71,7 @@ def _update_tile_state(
 def streaming_stateful_tile_stats(points_stream: DataFrame, zoom: int) -> DataFrame:
     """Running per-tile (count, value sum, approx distinct users) maintained
     in explicit group state across micro-batches."""
-    x, y = lonlat_to_tile_cols(F.col("lon"), F.col("lat"), zoom)
+    x, y = lonlat_to_tile_cols("lon", "lat", zoom)
     keyed = points_stream.withColumn("x", x).withColumn("y", y)
     return keyed.groupBy("x", "y").applyInPandasWithState(
         _update_tile_state,

@@ -24,7 +24,7 @@ def streaming_tile_counts(
     lat_col: str = "lat",
 ) -> DataFrame:
     """Running count of points per tile (complete/update mode aggregate)."""
-    x, y = lonlat_to_tile_cols(F.col(lon_col), F.col(lat_col), zoom)
+    x, y = lonlat_to_tile_cols(lon_col, lat_col, zoom)
     return (
         points_stream.withColumn("x", x)
         .withColumn("y", y)
@@ -45,7 +45,7 @@ def streaming_windowed_tile_stats(
 ) -> DataFrame:
     """Tumbling-window per-tile stats with late-data handling: watermark
     bounds state so the aggregation runs indefinitely (append mode)."""
-    x, y = lonlat_to_tile_cols(F.col(lon_col), F.col(lat_col), zoom)
+    x, y = lonlat_to_tile_cols(lon_col, lat_col, zoom)
     keyed = (
         points_stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
         .withWatermark(ts_col, watermark)
@@ -92,7 +92,7 @@ def streaming_convert(
     tiles_path = f"{out_dir}/tiles"
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        x, y = lonlat_to_tile_cols(F.col(lon_col), F.col(lat_col), zoom)
+        x, y = lonlat_to_tile_cols(lon_col, lat_col, zoom)
         assigned = (
             batch_df.withColumn("z", F.lit(zoom))
             .withColumn("x", x)

@@ -12,8 +12,10 @@ Every function exists in two forms:
 
 1. a **numpy** form (vectorized, used inside Arrow/pandas UDFs and unit
    tests), and
-2. a **Spark Column** form (pure ``pyspark.sql.functions`` expressions —
-   JVM-side, whole-stage-codegen friendly, zero Python in the hot path).
+2. a **Spark Column** form (built-in Spark SQL functions — JVM-side,
+   whole-stage-codegen friendly, zero Python in the hot path; the geocode
+   is built as one SQL string, so planning it costs one ``F.expr`` call
+   instead of a py4j round trip per operator).
 
 The Column form is the one production plans use: geocoding 10^12 pages must
 never leave the JVM.
@@ -26,6 +28,8 @@ import math
 import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from versatiles_rs_spark.sql_literals import sql_double, sql_name
 
 MAX_ZOOM_LEVEL = 30
 EARTH_RADIUS = 6_378_137.0
@@ -112,24 +116,24 @@ def ground_size_meters_np(z: int) -> float:
 # Spark Column forms (JVM-side, codegen-friendly)
 # ---------------------------------------------------------------------------
 
-def lonlat_to_tile_cols(lon: Column, lat: Column, z: Column | int) -> tuple[Column, Column]:
-    """Column-expression geocode: identical formula to ``lonlat_to_tile_np``.
+def lonlat_to_tile_cols(lon: str, lat: str, z: str | int) -> tuple[Column, Column]:
+    """Geocode of the columns named ``lon``/``lat`` at zoom ``z`` (a column
+    name or an int): identical formula to ``lonlat_to_tile_np``, each of x
+    and y one SQL expression.
 
     Pure built-in functions → stays inside WholeStageCodegen; this is the
     geocoding core applied to every page row, so it must never hit Python.
     """
-    zc = F.lit(z) if isinstance(z, int) else z
-    zoom = F.pow(F.lit(2.0), zc.cast("double"))
-    xf = zoom * (lon / F.lit(360.0) + F.lit(0.5))
-    yf = zoom * (
-        F.lit(0.5)
-        - F.lit(0.5)
-        * F.log(F.tan(lat * F.lit(math.pi) / F.lit(360.0) + F.lit(math.pi / 4.0)))
-        / F.lit(math.pi)
+    zc = sql_name(z) if isinstance(z, str) else str(int(z))
+    zoom = f"power(2.0D, CAST({zc} AS DOUBLE))"
+    pi = sql_double(math.pi)
+    xf = f"{zoom} * ({sql_name(lon)} / 360.0D + 0.5D)"
+    yf = (
+        f"{zoom} * (0.5D - 0.5D * ln(tan({sql_name(lat)} * {pi} / 360.0D"
+        f" + {sql_double(math.pi / 4.0)})) / {pi})"
     )
-    x = F.floor(F.greatest(F.lit(0.0), F.least(xf, zoom - F.lit(1.0)))).cast("bigint")
-    y = F.floor(F.greatest(F.lit(0.0), F.least(yf, zoom - F.lit(1.0)))).cast("bigint")
-    return x, y
+    x, y = (f"CAST(floor(greatest(0.0D, least({f}, {zoom} - 1.0D))) AS BIGINT)" for f in (xf, yf))
+    return F.expr(x), F.expr(y)
 
 
 def sort_index_col(z: Column, x: Column, y: Column) -> Column:
